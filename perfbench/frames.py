@@ -21,10 +21,16 @@ TOPIC = "cdc.public.users"
 N_PARTITIONS = 8
 EVENT_TYPES = ("signup", "purchase", "view", "click", "error")
 OPS = ("c", "u", "d")
+# Assumed, not measured: no public CDC trace gives a c/u/d mix.  The bucket
+# rewrite cost does not depend on it (README: "Traffic parameters").
 OP_WEIGHTS = (0.1, 0.8, 0.1)
 POISON_SHARE = 0.005
-ZIPF_S = 1.05
-RUN = 100  # consecutive offsets kept together when interleaving files
+# YCSB's Zipfian constant (ZipfianGenerator.ZIPFIAN_CONSTANT; Cooper et al.,
+# "Benchmarking Cloud Serving Systems with YCSB", SoCC 2010).
+ZIPF_S = 0.99
+# Consecutive offsets kept together when interleaving a round's files.
+# Assumed, not measured.
+RUN = 100
 TS_BASE_MS = 1_704_067_200_000  # 2024-01-01T00:00:00Z
 
 SPARK_SCHEMA = "key binary, value binary, topic string, partition int, offset long"
@@ -62,11 +68,12 @@ def _join(*parts) -> pa.Array:
     return pc.binary_join_element_wise(*parts, "")
 
 
-def make_records(rng: np.random.Generator, keys: KeySampler, offset_base: int, n: int) -> pa.Table:
+def make_records(rng: np.random.Generator, keys: KeySampler, offset_base: int, n: int,
+                 op_weights=OP_WEIGHTS) -> pa.Table:
     """``n`` records with offsets ``offset_base .. offset_base + n - 1``."""
     pk = keys.sample(rng, n)
     offset = offset_base + np.arange(n, dtype=np.int64)
-    op = np.asarray(OPS)[rng.choice(len(OPS), n, p=OP_WEIGHTS)]
+    op = np.asarray(OPS)[rng.choice(len(OPS), n, p=op_weights)]
     etype = np.asarray(EVENT_TYPES)[rng.integers(0, len(EVENT_TYPES), n)]
     cents = rng.integers(0, 100_000, n)
     poison = rng.random(n) < POISON_SHARE

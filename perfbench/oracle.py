@@ -18,7 +18,7 @@ STATE_COLS = ["pk", "offset", "op", "event_type", "value"]
 
 def _connect() -> duckdb.DuckDBPyConnection:
     con = duckdb.connect()
-    con.execute("SET threads = 2")
+    con.execute("SET threads = 4")
     con.execute("SET memory_limit = '2GB'")
     con.execute(f"SET temp_directory = '{tempfile.gettempdir()}'")
     return con

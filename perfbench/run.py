@@ -3,13 +3,15 @@
     python3 perfbench/run.py --workload trickle|queries \
         --seed N --seconds S --trace 0|1
 
-Run from the repository root.  Inputs are generated from ``--seed`` under
-``perfbench/.work/`` (removed at exit); results, and in traced runs the
-span file and per-layer self-time table, go to ``perfbench/out/``.  The
-last line of standard output is one JSON object with ``correct``,
-``attempted``, ``failed`` and ``metrics``: every end-to-end metric with
-``--trace 0``, every per-layer metric with ``--trace 1``.  The exit code
-is 0 only when every output matched its oracle.
+Run from the repository root.  trickle generates its inputs from
+``--seed`` under ``perfbench/.work/`` (removed at exit); queries reads the
+fixed sf0.01 tables under ``perfbench/fixture/``.  Results, and in traced
+runs the span file and per-layer self-time table, go to
+``perfbench/out/``.  The last line of standard output is one JSON object
+with ``correct``, ``attempted``, ``failed`` and ``metrics``: every
+end-to-end metric with ``--trace 0``, every per-layer metric with
+``--trace 1``.  The exit code is 0 only when every output matched its
+oracle.
 """
 
 from __future__ import annotations
@@ -24,7 +26,9 @@ import time
 
 BENCH_DIR = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(BENCH_DIR)
-QUERY_SF = 0.01
+# The sf0.01 tables the repository's correctness tests read, copied byte
+# for byte so the query workload runs inside its own checkout.
+FIXTURE_DIR = os.path.join(BENCH_DIR, "fixture", "sf0.01")
 
 
 def _mem_total_bytes() -> int:
@@ -63,7 +67,7 @@ def _pin_host(work: str) -> dict:
     count at import)."""
     cpus = len(os.sched_getaffinity(0))
     mem = _mem_total_bytes()
-    heap_mb = min(2048, int(mem * 0.4) // 2**20)
+    heap_max_mb = min(2048, int(mem * 0.4) // 2**20)
     local = os.path.join(work, "spark-local")
     os.makedirs(local)
     tmp = os.path.join(work, "tmp")
@@ -76,14 +80,14 @@ def _pin_host(work: str) -> dict:
                     f"-Djava.io.tmpdir={tmp}", "-XX:-UsePerfData") if o
     )
     os.environ["SPARK_GRAFT_CPUS"] = str(cpus)
-    os.environ["SPARK_GRAFT_DRIVER_MEM"] = f"{heap_mb}m"
+    os.environ["SPARK_GRAFT_DRIVER_MEM"] = f"{heap_max_mb}m"
     os.environ["SPARK_LOCAL_DIRS"] = local
     # executors' Python workers import the engine's UDFs by module path
     os.environ["PYTHONPATH"] = os.pathsep.join(
         p for p in (ROOT, os.environ.get("PYTHONPATH")) if p
     )
     sys.path.insert(0, ROOT)
-    return {"cpus": cpus, "mem_total_mb": mem // 2**20, "heap_mb": heap_mb}
+    return {"cpus": cpus, "mem_total_mb": mem // 2**20, "heap_max_mb": heap_max_mb}
 
 
 def _vm_hwm_mb(pid: int) -> float:
@@ -92,6 +96,16 @@ def _vm_hwm_mb(pid: int) -> float:
             if line.startswith("VmHWM:"):
                 return int(line.split()[1]) / 1024
     return 0.0
+
+
+def _jvm_heap_peak_mb(spark) -> float:
+    """Sum over the JVM's heap memory pools of each pool's peak use."""
+    mgmt = spark._jvm.java.lang.management.ManagementFactory
+    heap = spark._jvm.java.lang.management.MemoryType.HEAP
+    return sum(
+        pool.getPeakUsage().getUsed() for pool in mgmt.getMemoryPoolMXBeans()
+        if pool.getType().equals(heap)
+    ) / 2**20
 
 
 def _descendants(pid: int) -> set[int]:
@@ -195,7 +209,6 @@ def main(argv: list[str] | None = None) -> int:
         from perfbench.trickle import READER_GROUP, TrickleWorkload
         from perfbench.queries import QueryWorkload
         from perfbench.stats import median
-        from perfbench.tables import write_tables
         from perfbench.trace import ProgressListener, Tracer
 
         traced = bool(args.trace)
@@ -203,12 +216,6 @@ def main(argv: list[str] | None = None) -> int:
         conf = {
             "spark.sql.warehouse.dir": os.path.join(work, "warehouse"),
             "spark.ui.showConsoleProgress": "false",
-            # a heap committed and touched at its pinned size: heap growth
-            # would read as a trend in batch latency, and how much of the
-            # heap GC happened to touch as noise in peak RSS
-            "spark.driver.extraJavaOptions": (
-                f"-Xms{host['heap_mb']}m -XX:+AlwaysPreTouch"
-            ),
         }
         if traced:
             os.makedirs(os.path.join(work, "eventlog"))
@@ -217,11 +224,6 @@ def main(argv: list[str] | None = None) -> int:
                 "spark.eventLog.dir": os.path.join(work, "eventlog"),
                 "spark.eventLog.compress": "false",
             })
-        sf_dir = os.path.join(work, "tables")
-        n_events = 0
-        if args.workload == "queries":
-            n_events = write_tables(args.seed, QUERY_SF, sf_dir)["events"]
-
         t0 = time.perf_counter()
         spark = get_spark(app_name=f"perfbench-{args.workload}", extra_conf=conf)
         spark.range(1).count()
@@ -233,7 +235,7 @@ def main(argv: list[str] | None = None) -> int:
             spark.streams.addListener(listener)
             wl = TrickleWorkload(spark, work, args.seed, tracer, listener)
         else:
-            wl = QueryWorkload(spark, sf_dir, tracer, n_events)
+            wl = QueryWorkload(spark, FIXTURE_DIR, tracer)
         marks["session"] = time.perf_counter()
         wl.setup()
         marks["setup"] = time.perf_counter()
@@ -242,6 +244,7 @@ def main(argv: list[str] | None = None) -> int:
         obs = wl.measure(args.seconds, traced=traced)
         jvm_pid = spark._jvm.ProcessHandle.current().pid()
         peak_rss_mb = _vm_hwm_mb(jvm_pid)
+        heap_peak_mb = _jvm_heap_peak_mb(spark)
         e2e, detail = wl.end_to_end(obs)
         layers = {}
         if traced:
@@ -249,6 +252,7 @@ def main(argv: list[str] | None = None) -> int:
             layers["session.start_s"] = session_start
             layers.update(wl.per_layer(obs))
             layers["trace.overhead_pct"] = wl.overhead_pct(obs)
+            layers["jvm.heap_peak_mb"] = heap_peak_mb
             if trickle:
                 layers["sources.decode_events_per_s"] = wl.decode_rate()
                 wl.add_pipeline_spans(obs)
@@ -279,6 +283,7 @@ def main(argv: list[str] | None = None) -> int:
             "workload": args.workload, "seed": args.seed, "seconds": args.seconds,
             "trace": args.trace, "git_sha": _git_sha(), **host, "detail": detail,
             "setup_reps_s": wl.setup_reps, "session_start_s": session_start,
+            "heap_peak_mb": heap_peak_mb,
             "problems": problems,
             "phases_s": {k: round(v - marks["start"], 2) for k, v in marks.items()},
         }

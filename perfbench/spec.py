@@ -9,25 +9,26 @@ import os
 RUN_SECONDS = 16
 
 WORKLOADS = {
-    "trickle": "steady-state CDC: 1,000-record batches into ~1M keys of state with live "
-               "reads beside them; per-batch fixed cost and the O(state) bucket rewrite dominate",
-    "queries": "the 21 bench.py headline registry queries, closed loop, one client; the only "
-               "workload that exercises operators and shows session-wide costs on the query side",
+    "trickle": "steady-state CDC: 1,000-record batches into ~1M keys of state; per-batch fixed "
+               "cost and the O(state) bucket rewrite dominate; open-loop reads beside the writer "
+               "show contention",
+    "queries": "the 21 bench.py headline registry queries on the sf0.01 test fixture, closed "
+               "loop, one client; the only workload that exercises operators",
 }
 
 # name, unit, better, bound (share of the parent's median it may worsen by)
 END_TO_END = (
     ("setup_s", "s", "lower", 0.25),
-    ("ingest_events_per_s", "1/s", "higher", 0.24),
-    ("batch_latency_p50_ms", "ms", "lower", 0.24),
-    ("batch_latency_tail_ms", "ms", "lower", 0.24),
-    ("read_latency_p50_ms", "ms", "lower", 0.24),
-    ("read_latency_tail_ms", "ms", "lower", 0.24),
+    ("ingest_events_per_s", "1/s", "higher", 0.25),
+    ("batch_latency_p50_ms", "ms", "lower", 0.25),
+    ("read_latency_p50_ms", "ms", "lower", 0.25),
+    ("read_latency_tail_ms", "ms", "lower", 0.25),
+    ("live_read_latency_ms", "ms", "lower", 0.25),
     ("reads_ok_share", "share", "higher", 0.05),
-    ("queries_total_s", "s", "lower", 0.24),
-    ("queries_geomean_s", "s", "lower", 0.24),
+    ("queries_total_s", "s", "lower", 0.25),
+    ("queries_geomean_s", "s", "lower", 0.25),
     ("ok_share", "share", "higher", 0.05),
-    ("peak_rss_mb", "MB", "lower", 0.1),
+    ("peak_rss_mb", "MB", "lower", 0.25),
 )
 
 # The headline set of the repository's bench.py: one query per operator
@@ -76,6 +77,7 @@ PER_LAYER = (
     *((f"query.{q}_s", "s", "lower") for q in HEADLINE),
     ("gen.reader_lateness_ms", "ms", "lower"),
     ("trace.overhead_pct", "%", "lower"),
+    ("jvm.heap_peak_mb", "MB", "lower"),
 )
 
 

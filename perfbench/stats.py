@@ -5,7 +5,12 @@ from __future__ import annotations
 import math
 import statistics
 
-TAIL_LADDER = (99.9, 99.0, 95.0, 90.0, 75.0, 50.0)
+# The percentile every ``*_tail_*`` figure reports.  A run has 16
+# writer-free reads (trickle) or 21 query runs (queries); at those counts no
+# percentile above the median has ten samples beyond it, so the tail is p90
+# (linear interpolation), which falls at or between a run's second and
+# third slowest samples.  Callers record the sample count beside it.
+TAIL_PCT = 90.0
 
 
 def percentile(values: list[float], pct: float) -> float:
@@ -19,15 +24,8 @@ def percentile(values: list[float], pct: float) -> float:
     return xs[lo] + (xs[hi] - xs[lo]) * (k - lo)
 
 
-def tail(values: list[float]) -> tuple[float, float]:
-    """The highest ladder percentile with at least ten samples beyond it,
-    and that percentile.  Below 20 samples no percentile qualifies and the
-    median is reported; the caller records the sample count beside it."""
-    n = len(values)
-    for pct in TAIL_LADDER:
-        if n * (1 - pct / 100.0) >= 10:
-            return percentile(values, pct), pct
-    return percentile(values, 50.0), 50.0
+def tail(values: list[float]) -> float:
+    return percentile(values, TAIL_PCT)
 
 
 def median(values: list[float]) -> float:

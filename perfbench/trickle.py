@@ -2,17 +2,20 @@
 
 Set-up seeds ~1M keys into the upsert state.  The pipeline
 (``CdcPipeline.run_available_now``, ``maxFilesPerTrigger=1``) then ingests
-rounds of four 1,000-record Kafka/Debezium files into ``AppendSink`` +
+rounds of three 1,000-record Kafka/Debezium files into ``AppendSink`` +
 ``BucketedUpsertSink(n_buckets=16)`` + ``DlqWriter``, while one reader
 thread reads the live state on an open loop through a ``read_only`` sink
 under ``serving.run_stable``.  Per-batch fixed cost and the O(state)
-bucket rewrite dominate; the reads show any write-side gain that costs
-serving.
+bucket rewrite dominate.  The live reads count toward ``reads_ok_share``
+and the per-layer ``serve.live_read_ms``; the bounded read-latency metrics
+come from the reads repeated after ingest with no writer running, so they
+leave out contention with the writer.
 """
 
 from __future__ import annotations
 
 import os
+import statistics
 import threading
 import time
 
@@ -31,20 +34,23 @@ from cdc_platform_spark.streaming.pipeline import (
 from cdc_platform_spark.streaming.serving import run_stable
 
 from perfbench import frames, oracle
-from perfbench.stats import geomean, median, percentile, tail
+from perfbench.stats import TAIL_PCT, geomean, median, percentile, tail
 
 N_BUCKETS = 16
 READER_GROUP = "perfbench-reader"
-# Three reads in four are point lookups, so the median read falls inside
-# the point-lookup distribution rather than on the edge between kinds.
+# Three reads in four are point lookups.  The mix is an assumption, not
+# taken from a measured serving trace; it was chosen so the median read
+# falls inside the point-lookup distribution rather than on the edge
+# between kinds.
 READ_CYCLE = ("point_lookup", "point_lookup", "point_lookup", "state_scan",
               "point_lookup", "point_lookup", "point_lookup", "append_view")
 SETUP_REPS = 3
 KEYS = 1_000_000  # key space; set-up seeds every key
-FILES_PER_ROUND = 4
+FILES_PER_ROUND = 3
 PER_FILE = 1_000
 ROUND_S = 8  # nominal seconds per round; --seconds / ROUND_S rounds are run
-# Open-loop read rate.  At ~0.6 s per read under ingest load, one reader
+# Open-loop read rate.  A live read takes ~0.7 s (median) under ingest load
+# and up to ~2 s when it lands on the upsert's heavy stages, so one reader
 # thread keeps up at this rate without a growing backlog.
 READ_RATE = 0.5
 QUIET_PASSES = 2  # passes through the read cycle after ingest, no writer running
@@ -171,14 +177,13 @@ class Reads:
 
 class OpenLoopReader(threading.Thread):
     """Issues reads at a fixed rate from one thread; each read is timed from
-    when it was due.  Reads due before ``stop`` that never started count as
-    failed."""
+    when it was due.  Every read due before ``stop`` is issued, so a backlog
+    left when ingest ends is drained rather than dropped."""
 
     def __init__(self, reads: Reads, rate: float, pks: np.ndarray) -> None:
         super().__init__(name="perfbench-reader", daemon=True)
         self.reads, self.rate, self.pks = reads, rate, pks
         self.samples: list[dict] = []
-        self.missed = 0
         self._stop_at: float | None = None
         self._wake = threading.Event()
         self.error: BaseException | None = None
@@ -197,8 +202,7 @@ class OpenLoopReader(threading.Thread):
                 wait = due - time.perf_counter()
                 if wait > 0 and self._stop_at is None:
                     self._wake.wait(wait)
-                if self._stop_at is not None:
-                    self.missed = max(0, int((self._stop_at - t0) * self.rate) + 1 - i)
+                if self._stop_at is not None and due > self._stop_at:
                     return
                 start = time.perf_counter()
                 r = self.reads.read(READ_CYCLE[i % len(READ_CYCLE)], int(self.pks[i % len(self.pks)]))
@@ -269,9 +273,8 @@ class TrickleWorkload:
     def setup(self) -> None:
         """Create the pipeline and seed its upsert state, then start the
         pipeline ``SETUP_REPS`` times, each run over one 1,000-record file.
-        A set-up is the seeding plus one such run.  The runs, and one
-        untimed pass through the read cycle, let codegen and JIT settle
-        before the measured rounds."""
+        A set-up is the seeding plus one such run.  The runs let codegen
+        and JIT settle before the measured rounds."""
         p = Pipeline(self.spark, f"{self.work}/trickle", self.listener)
         t0 = time.perf_counter()
         p.seed(KEYS)
@@ -282,9 +285,6 @@ class TrickleWorkload:
             p.run()
             self.setup_reps.append(seed_s + time.perf_counter() - t0)
         self.pipeline = p
-        reads = Reads(self.spark, p.root, self.tracer)
-        for kind in READ_CYCLE:
-            reads.read(kind, int(self.keys.sample(self.rng, 1)[0]))
 
     def measure(self, seconds: float, traced: bool) -> dict:
         """Ingest ``seconds / ROUND_S`` rounds (at least one), a fixed
@@ -332,7 +332,7 @@ class TrickleWorkload:
         for s in self.tracer.spans:
             if s.name.startswith("sink.") and s.batch is None:
                 s.batch = _batch_of(s.start, batches)
-        return {"runs": runs, "reads": reader.samples, "missed": reader.missed,
+        return {"runs": runs, "reads": reader.samples,
                 "quiet": quiet, "probes": probes}
 
     def decode_rate(self, n_reps: int = 3) -> float:
@@ -385,30 +385,26 @@ class TrickleWorkload:
         rows = sum(b["rows"] for b in batches)
         wall = sum(r["wall"] for r in obs["runs"])
         lat = [r["latency"] * 1000 for r in obs["quiet"] if r["ok"]]
-        kind_medians = [
-            median([r["latency"] for r in obs["quiet"] if r["kind"] == k and r["ok"]])
-            for k in set(READ_CYCLE)
-        ]
         all_reads = obs["reads"] + obs["quiet"]
-        attempted_reads = len(all_reads) + obs["missed"]
+        attempted_reads = len(all_reads)
         ok_reads = sum(r["ok"] for r in all_reads)
-        batch_tail, batch_pct = tail(trig)
-        read_tail, read_pct = tail(lat)
         metrics = {
             "ingest_events_per_s": rows / wall,
             "batch_latency_p50_ms": median(trig),
-            "batch_latency_tail_ms": batch_tail,
             "read_latency_p50_ms": median(lat),
-            "read_latency_tail_ms": read_tail,
+            "read_latency_tail_ms": tail(lat),
+            "live_read_latency_ms": statistics.fmean(
+                [r["latency"] * 1000 for r in obs["reads"] if r["ok"]]),
             "reads_ok_share": ok_reads / attempted_reads,
-            "queries_total_s": sum(kind_medians),
-            "queries_geomean_s": geomean(kind_medians),
+            "queries_total_s": sum(lat) / 1000,
+            "queries_geomean_s": geomean(lat) / 1000,
         }
         detail = {
-            "batches": len(batches), "batch_tail_pct": batch_pct, "events": rows,
+            "batches": len(batches), "tail_pct": TAIL_PCT, "events": rows,
+            "batch_tail_ms": tail(trig),
             "batch_ms": trig, "read_ms": [round(x) for x in lat],
             "live_read_ms": [round(r["latency"] * 1000) for r in obs["reads"] if r["ok"]],
-            "ingest_wall_s": wall, "reads": attempted_reads, "read_tail_pct": read_pct,
+            "ingest_wall_s": wall, "reads": attempted_reads, "quiet_reads": len(lat),
             "read_errors": sorted({r["error"] for r in all_reads if "error" in r}),
             "attempted": len(batches) + attempted_reads, "failed": attempted_reads - ok_reads,
         }
