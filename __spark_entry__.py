@@ -121,31 +121,32 @@ def _last_green() -> dict[str, str]:
 # configuration" and shipped 17 red registry entries; never again.  Prune
 # entries only once a post-change green row exists.
 _REVERIFY = {
-    # round 14: CosineNeighborIndexSink.write() dropped the seven forced
-    # touched/t2 broadcast hints (AQE decides now — VERDICT r13 #1, the
-    # same de-hinting the span sink got in r13).
-    # (round-13 entries sq_span_dedup_stream /
-    # sq_span_filtered_curation_stream / w_gapfill_locf pruned: each has
-    # a post-change r13 green row.  The r14 compact() read_only guards in
-    # the span/session sinks are NOT on any registered query's runtime
-    # path — maintenance CLI + tests only.)
-    "sq_neighbor_index_stream",
-    # round 14: _stage_event_session_cdc's update wave now moves the
-    # event_id % 14 = 0 slice to user_id + 1 (cross-user move, ADVICE
-    # r13) with the oracle's live CTE mirroring it — staged data AND
-    # oracle changed.
-    "sq_session_stats_stream",
-    # round 14: serve-path decode now casts value_sum to DOUBLE to match
-    # the batch w_gapfill_locf / oracle type (ADVICE r13).
+    # The flat sinks are gone: unbucketed state is the bucketed sink with
+    # n_buckets=1.  Four queries switched from a flat sink to the bucketed
+    # form at n_buckets=1:
+    "sq_upsert_state_stream",
+    "sq_incremental_agg_stream",
+    "sq_ann_index_stream",
+    "sq_cluster_sample_from_index",
+    # BucketedIvfIndexSink / BucketedIvfPqIndexSink now define the
+    # assignment (_assign) they used to borrow from the flat classes, and
+    # BucketedIvfFlatIndexSink calls it through super() — every query that
+    # drives an IVF index sink re-certifies:
+    "sq_ann_index_pq_stream",
+    "sq_ann_search_from_index",
+    "sq_ann_search_pq_from_index",
+    "sq_ann_search_projection",
+    "sq_ivf_drift_stream",
+    "sq_pq_recon_stream",
+    # BucketedAggregatingSink now defines its own _COLS:
+    "sq_bucketed_agg_stream",
+    "sq_gapfill_locf_cdc_stream",
     "sq_gapfill_locf_stream",
-    # round 14: span_stats() grew the bucket-pruned point-serve branch
-    # (VERDICT r13 #3) — the no-doc_id path is refactored (src variable)
-    # and the constructor pins stats._STATE_SCHEMA, so both streams whose
-    # serve goes through span_stats() re-certify.
-    "sq_span_dedup_stream",
-    "sq_span_filtered_curation_stream",
+    # (the round-14 entries are pruned: each has a post-change green row
+    # in CORRECTNESS_r14.json; sq_gapfill_locf_stream re-enters above for
+    # this change)
 }
-_REVERIFY_ASOF = "CORRECTNESS_r13.json"  # last pre-change correctness file
+_REVERIFY_ASOF = "CORRECTNESS_r15.json"  # last pre-change correctness file
 
 
 def _priority_order(registry) -> list[str]:

@@ -109,11 +109,10 @@ def main() -> None:
     import tempfile
 
     from cdc_platform_spark.streaming.pipeline import (
-        AggregatingSink,
         AppendSink,
+        BucketedAggregatingSink,
         BucketedUpsertSink,
         CdcPipeline,
-        UpsertSink,
     )
 
     def run_pipeline(make_sinks) -> float:
@@ -135,7 +134,11 @@ def main() -> None:
             shutil.rmtree(workdir, ignore_errors=True)
 
     def flat_sinks(wd: str) -> dict:
-        return {"append": AppendSink(f"{wd}/append"), "upsert": UpsertSink(f"{wd}/state")}
+        # unbucketed state: one bucket, every batch rewrites the whole state
+        return {
+            "append": AppendSink(f"{wd}/append"),
+            "upsert": BucketedUpsertSink(f"{wd}/state", n_buckets=1),
+        }
 
     def bucketed_sinks(wd: str) -> dict:
         # the 100 TB upsert form: hash-bucketed state so a micro-batch
@@ -149,13 +152,11 @@ def main() -> None:
         # incremental materialized-aggregate view maintenance
         return {
             "append": AppendSink(f"{wd}/append"),
-            "aggview": AggregatingSink(f"{wd}/aggview"),
+            "aggview": BucketedAggregatingSink(f"{wd}/aggview", n_buckets=1),
         }
 
     def bucketed_agg_sinks(wd: str) -> dict:
         # the 100 TB aggregate form: per-bucket copy-on-write state
-        from cdc_platform_spark.streaming.pipeline import BucketedAggregatingSink
-
         return {
             "append": AppendSink(f"{wd}/append"),
             "aggview": BucketedAggregatingSink(f"{wd}/aggview", n_buckets=16),

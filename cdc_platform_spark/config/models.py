@@ -102,8 +102,9 @@ class SinkConfig(BaseModel, extra="forbid"):
     # the cadence: compact when the snapshot has more than this many
     # file groups)
     compact_max_files: int = Field(default=4, ge=1)
-    # upsert only: >0 hash-buckets the state so a micro-batch rewrites only
-    # the buckets its keys fall in (BucketedUpsertSink); 0 = full rewrite
+    # >0 hash-buckets the state so a micro-batch rewrites only the buckets
+    # its keys fall in; 0 = the sink type's default (one bucket for upsert,
+    # i.e. every batch rewrites the whole state; 16 for the index sinks)
     state_buckets: int = Field(default=0, ge=0)
 
     @model_validator(mode="after")

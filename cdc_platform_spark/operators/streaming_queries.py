@@ -199,10 +199,11 @@ def sq_session_per_user_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     category="streaming",
     doc=(
         "J1/W2 as a driver-checkable artifact: the CdcPipeline runs "
-        "availableNow over 4 single-file micro-batches into an UpsertSink "
-        "(in-batch dedup-by-latest, union with state, latest-per-key, atomic "
-        "swap); the final live state must equal the batch latest-per-key "
-        "oracle regardless of how events were split across batches."
+        "availableNow over 4 single-file micro-batches into a one-bucket "
+        "BucketedUpsertSink (the unbucketed form: union with state, "
+        "latest-per-key, journaled commit of the whole state); the final "
+        "live state must equal the batch latest-per-key oracle regardless "
+        "of how events were split across batches."
     ),
     oracle=f"""
         WITH env AS ({_ENV_SQL}),
@@ -217,11 +218,11 @@ def sq_session_per_user_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def sq_upsert_state_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from cdc_platform_spark.streaming.pipeline import CdcPipeline, UpsertSink
+    from cdc_platform_spark.streaming.pipeline import BucketedUpsertSink, CdcPipeline
 
     work = _workdir("sq_upsert_")
     src = _stage_chunks(spark, sf_dir, work)
-    sink = UpsertSink(f"{work}/state")
+    sink = BucketedUpsertSink(f"{work}/state", n_buckets=1)
     CdcPipeline(
         spark=spark,
         source_dir=src,
@@ -580,9 +581,10 @@ def sq_dlq_quarantine_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc=(
         "Incremental materialized-aggregate maintenance as a driver-"
         "checkable artifact (the aggregate-level complement of SQ5's "
-        "row-level upsert): AggregatingSink folds one partial-aggregate "
-        "merge per micro-batch into a per-key count/sum/min/max view — "
-        "never rescanning history, decimal sums so the end state is "
+        "row-level upsert): a one-bucket BucketedAggregatingSink folds one "
+        "partial-aggregate merge per micro-batch into a per-key "
+        "count/sum/min/max view — never rescanning history, decimal sums "
+        "so the end state is "
         "batch-split-independent, batch-id-fenced against at-least-once "
         "redelivery — driven availableNow over 4 micro-batches; the final "
         "view must equal the one-shot batch aggregate."
@@ -600,11 +602,11 @@ def sq_dlq_quarantine_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def sq_incremental_agg_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from cdc_platform_spark.streaming.pipeline import AggregatingSink, CdcPipeline
+    from cdc_platform_spark.streaming.pipeline import BucketedAggregatingSink, CdcPipeline
 
     work = _workdir("sq_incr_")
     src = _stage_chunks(spark, sf_dir, work)
-    sink = AggregatingSink(f"{work}/aggview")
+    sink = BucketedAggregatingSink(f"{work}/aggview", n_buckets=1)
     CdcPipeline(
         spark=spark,
         source_dir=src,
@@ -1048,8 +1050,8 @@ def _stage_document_cdc(spark: SparkSession, sf_dir: str, work: str, domains: bo
         "embeddings table and FROZEN (the versioned-quantizer production "
         "pattern), then a synthetic embedding CDC stream - full insert "
         "wave, then updates (reversed vectors, vec_id % 7 = 0) and deletes "
-        "(vec_id % 11 = 3) - is driven availableNow through IvfIndexSink: "
-        "each micro-batch assigns ONLY its own vectors (broadcast "
+        "(vec_id % 11 = 3) - is driven availableNow through a one-bucket "
+        "BucketedIvfIndexSink: each micro-batch assigns ONLY its own vectors (broadcast "
         "centroids, exact fixed-point argmax, never a corpus rescan), "
         "deletes tombstone, and the merged latest-per-vec_id state is the "
         "inverted file. The final index must equal a from-scratch rebuild "
@@ -1060,11 +1062,11 @@ def _stage_document_cdc(spark: SparkSession, sf_dir: str, work: str, domains: bo
 )
 def sq_ann_index_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cdc_platform_spark.operators.similarity import train_ivf_centroids
-    from cdc_platform_spark.streaming.ann_index import IvfIndexSink
+    from cdc_platform_spark.streaming.ann_index import BucketedIvfIndexSink
 
     work = _workdir("sq_annidx_")
     e, stream = _stage_embedding_cdc(spark, sf_dir, work)
-    sink = IvfIndexSink(f"{work}/index", train_ivf_centroids(e))
+    sink = BucketedIvfIndexSink(f"{work}/index", train_ivf_centroids(e), n_buckets=1)
     _run_index_stream(stream, sink, work)
     return sink.state(spark).orderBy("vec_id")
 
@@ -1141,8 +1143,9 @@ def _cluster_sample_from_index_oracle() -> str:
         "Cluster-balanced diversity sampling served FROM the maintained "
         "IVF index — the embedding counterpart of the curated corpus's "
         "mix_sample: the same embedding CDC stream as sq_ann_index_stream "
-        "drives IvfIndexSink (frozen Lloyd-trained quantizer, per-batch "
-        "assignment), then ivf_cluster_sample_from_index applies the batch "
+        "drives a one-bucket BucketedIvfIndexSink (frozen Lloyd-trained "
+        "quantizer, per-batch assignment), then ivf_cluster_sample_from_index "
+        "applies the batch "
         "sim_cluster_sample pick rule (SAMPLE_PER_CELL per cell in "
         "md5(vec_id) order, cell population attached) to the live inverted "
         "file — no re-cluster pass, the sink already maintains the "
@@ -1154,13 +1157,13 @@ def _cluster_sample_from_index_oracle() -> str:
 def sq_cluster_sample_from_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cdc_platform_spark.operators.similarity import train_ivf_centroids
     from cdc_platform_spark.streaming.ann_index import (
-        IvfIndexSink,
+        BucketedIvfIndexSink,
         ivf_cluster_sample_from_index,
     )
 
     work = _workdir("sq_clustersample_")
     e, stream = _stage_embedding_cdc(spark, sf_dir, work)
-    sink = IvfIndexSink(f"{work}/index", train_ivf_centroids(e))
+    sink = BucketedIvfIndexSink(f"{work}/index", train_ivf_centroids(e), n_buckets=1)
     _run_index_stream(stream, sink, work)
     return ivf_cluster_sample_from_index(sink.state(spark)).orderBy(
         "cell_id", "pick_rank"

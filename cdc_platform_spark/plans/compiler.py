@@ -18,7 +18,6 @@ from cdc_platform_spark.streaming.pipeline import (
     CdcPipeline,
     DlqWriter,
     RelationalAppendSink,
-    UpsertSink,
 )
 
 
@@ -58,8 +57,8 @@ class LakehouseUpsertSink:
     """Upsert sink: latest-per-key merge, one snapshot per batch (the
     reference's Iceberg upsert path, sinks/iceberg.py:187-197).  The merge
     algebra is streaming.pipeline.latest_per_key_merge — the same
-    definition UpsertSink uses, so tie-break/tombstone semantics cannot
-    drift between the parquet-swap and lakehouse-snapshot forms."""
+    latest-by-offset tie-break and tombstone retention as
+    BucketedUpsertSink's bucket merge."""
 
     _COLS = ["pk", "offset", "op", "event_type", "value"]
 
@@ -99,10 +98,7 @@ def compile_pipeline(
         elif s.type == "relational_append":
             sinks[s.id] = RelationalAppendSink(s.path)
         elif s.type == "upsert":
-            if s.state_buckets:
-                sinks[s.id] = BucketedUpsertSink(s.path, n_buckets=s.state_buckets)
-            else:
-                sinks[s.id] = UpsertSink(s.path)
+            sinks[s.id] = BucketedUpsertSink(s.path, n_buckets=s.state_buckets or 1)
         elif s.type == "lakehouse_append":
             sinks[s.id] = LakehouseAppendSink(
                 spark,

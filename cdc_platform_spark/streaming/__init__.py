@@ -3,6 +3,5 @@ from cdc_platform_spark.streaming.pipeline import (  # noqa: F401
     BucketedUpsertSink,
     CdcPipeline,
     DlqWriter,
-    UpsertSink,
     to_envelope,
 )

@@ -6,9 +6,9 @@ trained once (offline, frozen for the index generation, exactly how
 FAISS/SCaNN deployments version their quantizers), and the *inverted
 file* — the vec_id -> cell assignment table — is maintained
 incrementally as embedding rows are inserted/updated/deleted by the CDC
-stream.  This composes the round-4 streaming machinery
-(``AggregatingSink``'s merge-per-micro-batch + two-rename swap,
-streaming/pipeline.py) with the similarity family's exact fixed-point
+stream.  This composes the streaming machinery
+(``BucketedUpsertSink``'s merge-per-micro-batch + journaled per-bucket
+commit, streaming/pipeline.py) with the similarity family's exact fixed-point
 assignment math (operators/similarity.py): reference semantics are the
 keyed-upsert sink (J1/W2, ``/root/reference/src/cdc_platform/sinks/
 iceberg.py:187-197``) applied to an index artifact instead of a table.
@@ -20,15 +20,14 @@ Batch algebra per micro-batch (never rescans the corpus or the index):
      beyond the merge below,
   2. deletes become tombstones (cell = NULL) — retained in state so an
      out-of-order replay cannot resurrect a deleted vector,
-  3. merge: latest row per vec_id by offset into the swapped state dir
-     (same crash-recovery protocol as UpsertSink).
+  3. merge: latest row per vec_id by offset into the bucketed state
+     (same crash-recovery protocol as every bucketed sink).
 
-``state()`` is the live inverted file.  ``IvfIndexSink`` keeps it as a
-single swapped dir (test-scale); :class:`BucketedIvfIndexSink` IS the
-100 TB layout — the same assignment stage feeding
-``BucketedUpsertSink``'s collect-free per-bucket copy-on-write merge
-(DPP-pruned state scan, journaled atomic multi-bucket commit), so a
-micro-batch rewrites only the buckets its vectors hash into.
+``state()`` is the live inverted file.  :class:`BucketedIvfIndexSink`
+feeds the assignment stage into ``BucketedUpsertSink``'s collect-free
+per-bucket copy-on-write merge (DPP-pruned state scan, journaled atomic
+multi-bucket commit), so a micro-batch rewrites only the buckets its
+vectors hash into; ``n_buckets=1`` is the unbucketed form.
 """
 
 from __future__ import annotations
@@ -50,26 +49,37 @@ from cdc_platform_spark.streaming.pipeline import (
 )
 
 
-class IvfIndexSink:
-    """Materialized IVF assignment view over an embedding CDC stream.
+class BucketedIvfIndexSink(BucketedUpsertSink):
+    """Materialized IVF assignment view over an embedding CDC stream:
+    the inverted file partitioned by ``pmod(hash(vec_id), n_buckets)``
+    with per-bucket copy-on-write — a micro-batch reads and rewrites
+    only the buckets its vectors hash into, through the exact
+    collect-free machinery of ``BucketedUpsertSink`` (DPP-pruned state
+    semi-join, single bucket-keyed merge shuffle, journaled atomic
+    multi-bucket commit).  Only ``_updates`` differs: batch rows pass
+    through the broadcast-centroid assignment before the merge.
 
+    Latest assignment per vec_id by offset, delete tombstones retained —
+    asserted against the batch assignment of the live vectors.
     ``centroids`` is the frozen coarse quantizer ``(cent_id, ca, cn)``
     (fixed-point arrays + precomputed norms, as produced by
-    ``operators.similarity.train_ivf_centroids``); it is captured
-    eagerly (localCheckpoint) so every micro-batch broadcasts the same
-    trained table.
+    ``operators.similarity.train_ivf_centroids``); it is captured eagerly
+    so every micro-batch broadcasts the same trained table.
     """
 
+    _KEY = "vec_id"
     _COLS = ["vec_id", "offset", "op", "cell"]
+    _STATE_SCHEMA = "vec_id long, offset long, op string, cell long"
 
     def __init__(
-        self, path: str, centroids: DataFrame, read_only: bool = False
+        self,
+        path: str,
+        centroids: DataFrame,
+        n_buckets: int = 16,
+        read_only: bool = False,
     ) -> None:
-        self.path = path
+        BucketedUpsertSink.__init__(self, path, n_buckets, read_only=read_only)
         self.cents = centroids.transform(materialize, eager=True)
-        # read_only: serving-process mode — state() recovery never mutates
-        # (raises StateInFlightError on a mid-swap dir), write() refuses
-        self.read_only = read_only
 
     def _assign(self, batch: DataFrame) -> DataFrame:
         """(vec_id, offset, op, a) -> (vec_id, offset, op, cell): exact
@@ -97,52 +107,54 @@ class IvfIndexSink:
         # with columns this stage does not produce yet (e.g. codes)
         return assigned.select("vec_id", "offset", "op", "cell").unionByName(dels)
 
-    def write(self, batch: DataFrame) -> None:
-        if not batch.take(1):
-            return  # empty/replayed-out micro-batch: skip the index merge
-        if self.read_only:
-            raise RuntimeError(
-                f"{self.path}: index opened read_only (serving mode) — "
-                "writes belong to the pipeline process"
-            )
-        _recover_swapped_dir(self.path)
-        spark = batch.sparkSession
-        updates = self._assign(batch)
-        if os.path.isdir(self.path):
-            updates = spark.read.parquet(self.path).unionByName(updates)
-        value_cols = self._COLS[1:]  # everything but the vec_id key
-        merged = (
-            updates.groupBy("vec_id")
-            .agg(F.max_by(F.struct(*value_cols), F.col("offset")).alias("m"))
-            .select("vec_id", *[f"m.{c}" for c in value_cols])
+    def _recover(self) -> bool:
+        changed = super()._recover()
+        # the persisted quantizer sibling (save_quantizer) has no other
+        # recovery owner: heal it alongside the state dirs in writer mode
+        # (sweep crash-orphaned tmp copies, restore a mid-swap snapshot);
+        # read-only mode raises on a mid-swap quantizer like any store
+        _recover_swapped_dir(f"{self.path}.quantizer", read_only=self.read_only)
+        return changed
+
+    def _updates(self, batch: DataFrame) -> DataFrame:
+        return self._assign(batch).withColumn(
+            "bucket", F.pmod(F.hash(self._KEY), F.lit(self.n_buckets))
         )
-        tmp = f"{self.path}.tmp-{uuid.uuid4().hex}"
-        merged.write.mode("overwrite").parquet(tmp)
-        _commit_swap(self.path, tmp)
+
+    def state_fingerprint(self) -> tuple:
+        """Extends the bucketed-store fingerprint with the quantizer
+        sibling: an ann-search over a LIVE index root (not a pinned
+        generation) lazily reads both, so a quantizer swap mid-read must
+        flip the bracket too."""
+        from cdc_platform_spark.streaming.serving import fs_fingerprint
+
+        return fs_fingerprint([self.path, self._work, f"{self.path}.quantizer"])
 
     def state(self, spark: SparkSession) -> DataFrame:
         """The live inverted file: (vec_id, cell), tombstones dropped."""
-        _recover_swapped_dir(self.path, read_only=self.read_only)
         return (
-            spark.read.parquet(self.path)
+            self.raw_state(spark)
             .filter(F.col("op") != "d")
             .select("vec_id", "cell")
         )
 
 
-class IvfPqIndexSink(IvfIndexSink):
+class BucketedIvfPqIndexSink(BucketedIvfIndexSink):
     """IVF-PQ composite index as a materialized view: per vector the sink
     maintains BOTH the coarse cell (inverted-file membership) and the
     8-byte PQ code string — the full production ANN index artifact
     (operators/similarity.py's sim_ann_ivf_pq is the batch query over
-    exactly this (cell, codes) pair).  Codebooks are trained once and
-    frozen alongside the coarse quantizer; each micro-batch encodes ONLY
-    its own vectors: subvector explode (8 rows/vector), broadcast-join
-    the codebooks, exact-integer argmin per (vector, subspace), codes
-    re-packed into one CSV string (the driver-canonicalizer-safe
-    serialization the batch family uses)."""
+    exactly this (cell, codes) pair), in the per-bucket copy-on-write
+    layout.  Codebooks are trained once and frozen alongside the coarse
+    quantizer; each micro-batch encodes ONLY its own vectors: subvector
+    explode (8 rows/vector), broadcast-join the codebooks, exact-integer
+    argmin per (vector, subspace), codes re-packed into one CSV string
+    (the canonicalizer-safe serialization the batch family uses).
+    Latest per vec_id by offset, delete tombstones retained; a
+    micro-batch rewrites only the buckets its vectors hash into."""
 
     _COLS = ["vec_id", "offset", "op", "cell", "codes"]
+    _STATE_SCHEMA = "vec_id long, offset long, op string, cell long, codes string"
 
     def __init__(
         self,
@@ -150,9 +162,12 @@ class IvfPqIndexSink(IvfIndexSink):
         centroids: DataFrame,
         codebooks: DataFrame,
         ranks: DataFrame,
+        n_buckets: int = 16,
         read_only: bool = False,
     ) -> None:
-        super().__init__(path, centroids, read_only=read_only)
+        BucketedIvfIndexSink.__init__(
+            self, path, centroids, n_buckets, read_only=read_only
+        )
         self.codebooks = codebooks.transform(materialize, eager=True)
         self.ranks = ranks.transform(materialize, eager=True)
 
@@ -163,9 +178,7 @@ class IvfPqIndexSink(IvfIndexSink):
             _l2_long,
         )
 
-        # explicit base-class call, not super(): the bucketed subclass
-        # borrows this method from OUTSIDE this class's MRO
-        base = IvfIndexSink._assign(self, batch)  # (vec_id, offset, op, cell)
+        base = super()._assign(batch)  # (vec_id, offset, op, cell)
         # key the whole encode path by (vec_id, offset), not vec_id alone:
         # a batch can legitimately carry several versions of one vector
         # (insert + update in the same chunk), and a vec_id-only grouping
@@ -204,109 +217,6 @@ class IvfPqIndexSink(IvfIndexSink):
         )
         return base.join(codes, ["vec_id", "offset"], "left").select(*self._COLS)
 
-    def state(self, spark: SparkSession) -> DataFrame:
-        """The live composite index: (vec_id, cell, codes)."""
-        _recover_swapped_dir(self.path, read_only=self.read_only)
-        return (
-            spark.read.parquet(self.path)
-            .filter(F.col("op") != "d")
-            .select("vec_id", "cell", "codes")
-        )
-
-
-class BucketedIvfIndexSink(BucketedUpsertSink):
-    """The 100 TB storage form of :class:`IvfIndexSink`: the inverted file
-    partitioned by ``pmod(hash(vec_id), n_buckets)`` with per-bucket
-    copy-on-write — a micro-batch of embedding CDC reads and rewrites
-    only the buckets its vectors hash into, through the exact
-    collect-free machinery of ``BucketedUpsertSink`` (DPP-pruned state
-    semi-join, single bucket-keyed merge shuffle, journaled atomic
-    multi-bucket commit).  Only ``_updates`` differs: batch rows pass
-    through the broadcast-centroid assignment before the merge.
-
-    Identical semantics to IvfIndexSink (latest assignment per vec_id by
-    offset, delete tombstones retained); only the storage granularity
-    changes — asserted by the equivalence test.
-    """
-
-    _KEY = "vec_id"
-    _COLS = ["vec_id", "offset", "op", "cell"]
-    _STATE_SCHEMA = "vec_id long, offset long, op string, cell long"
-
-    def __init__(
-        self,
-        path: str,
-        centroids: DataFrame,
-        n_buckets: int = 16,
-        read_only: bool = False,
-    ) -> None:
-        BucketedUpsertSink.__init__(self, path, n_buckets, read_only=read_only)
-        self.cents = centroids.transform(materialize, eager=True)
-
-    _assign = IvfIndexSink._assign
-
-    def _recover(self) -> bool:
-        changed = super()._recover()
-        # the persisted quantizer sibling (save_quantizer) has no other
-        # recovery owner: heal it alongside the state dirs in writer mode
-        # (sweep crash-orphaned tmp copies, restore a mid-swap snapshot);
-        # read-only mode raises on a mid-swap quantizer like any store
-        _recover_swapped_dir(f"{self.path}.quantizer", read_only=self.read_only)
-        return changed
-
-    def _updates(self, batch: DataFrame) -> DataFrame:
-        return self._assign(batch).withColumn(
-            "bucket", F.pmod(F.hash(self._KEY), F.lit(self.n_buckets))
-        )
-
-    def state_fingerprint(self) -> tuple:
-        """Extends the bucketed-store fingerprint with the quantizer
-        sibling: an ann-search over a LIVE index root (not a pinned
-        generation) lazily reads both, so a quantizer swap mid-read must
-        flip the bracket too."""
-        from cdc_platform_spark.streaming.serving import fs_fingerprint
-
-        return fs_fingerprint([self.path, self._work, f"{self.path}.quantizer"])
-
-    def state(self, spark: SparkSession) -> DataFrame:
-        """The live inverted file: (vec_id, cell), tombstones dropped."""
-        return (
-            self.raw_state(spark)
-            .filter(F.col("op") != "d")
-            .select("vec_id", "cell")
-        )
-
-
-class BucketedIvfPqIndexSink(BucketedIvfIndexSink):
-    """The 100 TB storage form of :class:`IvfPqIndexSink`: the full IVF-ADC
-    composite artifact — coarse cell AND 8-byte PQ code string per vector —
-    in the per-bucket copy-on-write layout.  Identical semantics to
-    IvfPqIndexSink (same frozen quantizer + codebooks, same per-batch
-    encode of ONLY the batch's vectors, latest per vec_id by offset,
-    delete tombstones retained); only the storage granularity changes —
-    a micro-batch rewrites only the buckets its vectors hash into
-    (DPP-pruned state scan, journaled atomic multi-bucket commit),
-    asserted by the flat-vs-bucketed equivalence test."""
-
-    _COLS = ["vec_id", "offset", "op", "cell", "codes"]
-    _STATE_SCHEMA = "vec_id long, offset long, op string, cell long, codes string"
-
-    def __init__(
-        self,
-        path: str,
-        centroids: DataFrame,
-        codebooks: DataFrame,
-        ranks: DataFrame,
-        n_buckets: int = 16,
-        read_only: bool = False,
-    ) -> None:
-        BucketedIvfIndexSink.__init__(
-            self, path, centroids, n_buckets, read_only=read_only
-        )
-        self.codebooks = codebooks.transform(materialize, eager=True)
-        self.ranks = ranks.transform(materialize, eager=True)
-
-    _assign = IvfPqIndexSink._assign
 
     def state(self, spark: SparkSession) -> DataFrame:
         """The live composite index: (vec_id, cell, codes)."""
@@ -336,7 +246,7 @@ class BucketedIvfFlatIndexSink(BucketedIvfIndexSink):
     _STATE_SCHEMA = "vec_id long, offset long, op string, cell long, a array<long>"
 
     def _assign(self, batch: DataFrame) -> DataFrame:
-        base = IvfIndexSink._assign(self, batch)  # (vec_id, offset, op, cell)
+        base = super()._assign(batch)  # (vec_id, offset, op, cell)
         vecs = batch.filter(F.col("op") != "d").select("vec_id", "offset", "a")
         # key by (vec_id, offset): several versions of one vector may share
         # a batch; delete tombstones keep a NULL vector
@@ -799,7 +709,7 @@ def rotate_ivf_pq_generation(
     Offsets carry over, so the CDC stream resumes into the new
     generation with replay idempotence intact; the GC horizon is the max
     of both sinks' (the vectors are post-GC state: a lower fence would
-    let a sub-horizon replay resurrect keys the flat sink already GC'd).
+    let a sub-horizon replay resurrect keys the IVF-Flat sink already GC'd).
     The caller keeps writing micro-batches to the OLD generation until
     the :class:`IndexGenerationPointer` flip, exactly as for the Flat
     rotation.  O(state) once per retraining."""

@@ -2,13 +2,15 @@
 
 The 100 TB dedup story is not "re-run MinHash-LSH over the corpus
 nightly": when 0.1% of documents change, only those documents should be
-(re)hashed and only their band buckets probed.  This sink maintains two
-materialized views as a pair:
+(re)hashed and only their band buckets probed.
+:class:`BucketedMinHashIndexSink` maintains the materialized views
+together:
 
 - **index/** — the LSH signature index: latest (doc_id, offset, op,
   shingles, sig) per document, delete rows retained as tombstones (the
-  same keyed-upsert semantics as ``UpsertSink``; reference J1/W2,
-  ``/root/reference/src/cdc_platform/sinks/iceberg.py:187-197``),
+  same keyed-upsert semantics as ``BucketedUpsertSink``; reference
+  J1/W2, sinks/iceberg.py:187-197),
+- **bands/** — the probe-side band rows of the live signatures,
 - **pairs/** — the verified near-dup pair set (doc_a < doc_b, exact
   Jaccard >= threshold), kept consistent with the index.
 
@@ -18,26 +20,22 @@ Batch algebra per micro-batch (corpus-scan-free):
      ``shingles_col`` / ``minhash_sig_col`` from operators/dedup.py —
      so streamed and batch signatures can never drift),
   2. candidate pairs = batch band rows equi-joined against the live
-     index's band rows on (band, minhash) — every candidate involves a
+     band rows on (band, minhash) — every candidate involves a
      batch document by construction, so pairs between untouched
      documents are never re-derived,
   3. exact Jaccard verification (array_intersect) runs only on those
      candidates,
-  4. the pair view update is: drop every pair touching a batch doc_id
-     (two anti-joins), add the freshly verified ones — updates and
-     deletes therefore retract stale pairs,
-  5. both views commit via the two-rename swap with crash recovery;
-     a crash between the two swaps is healed by the batch replay
+  4. the pair view update is: drop every pair touching a batch doc_id,
+     add the freshly verified ones — updates and deletes therefore
+     retract stale pairs,
+  5. each store commits through the journaled per-bucket commit; a
+     crash between two stores' commits is healed by the batch replay
      (index merge is idempotent, the pair update is a deterministic
      function of index + batch).
 
 ``pairs()`` must equal the from-scratch ``dedup_minhash_lsh`` batch
 result over the live documents — the driver query's oracle states
 exactly that.
-
-At this scale-in-miniature both views are single swapped dirs; the
-``BucketedUpsertSink`` layout (bucket = band hash) is the drop-in
-upgrade for the index, exactly as for the upsert state.
 """
 
 from __future__ import annotations
@@ -65,119 +63,11 @@ from cdc_platform_spark.streaming.pipeline import (
 _PAIR_SCHEMA = "doc_a long, doc_b long, n_common long, jaccard double"
 
 
-class MinHashIndexSink:
-    """Materialized LSH index + near-dup pair view over a document CDC
-    stream of (doc_id, offset, op, text)."""
-
-    def __init__(self, path: str) -> None:
-        self.index_path = f"{path}/index"
-        self.pairs_path = f"{path}/pairs"
-        os.makedirs(path, exist_ok=True)
-
-    def _recover(self) -> None:
-        _recover_swapped_dir(self.index_path)
-        _recover_swapped_dir(self.pairs_path)
-
-    def write(self, batch: DataFrame) -> None:
-        if not batch.take(1):
-            return  # empty/replayed-out micro-batch: both views unchanged
-        self._recover()
-        spark = batch.sparkSession
-        run_id = uuid.uuid4().hex
-
-        # 1. latest row per doc within the batch, signatures for upserts only
-        latest = (
-            batch.groupBy("doc_id")
-            .agg(F.max_by(F.struct("offset", "op", "text"), F.col("offset")).alias("m"))
-            .select("doc_id", "m.offset", "m.op", "m.text")
-        )
-        sh = F.when(
-            F.col("op") != "d", shingles_col(F.split(F.col("text"), " "))
-        ).otherwise(F.array().cast("array<string>"))
-        rows = latest.select("doc_id", "offset", "op", sh.alias("shingles")).withColumn(
-            "sig",
-            F.when(
-                F.size("shingles") > 0,
-                minhash_sig_col(F.transform(F.col("shingles"), lambda s: md5_60bit(s))),
-            ),
-        )
-
-        # 2. merge into the signature index (latest per doc_id by offset)
-        merged = rows
-        if os.path.isdir(self.index_path):
-            merged = spark.read.parquet(self.index_path).unionByName(rows)
-        merged = (
-            merged.groupBy("doc_id")
-            .agg(
-                F.max_by(
-                    F.struct("offset", "op", "shingles", "sig"), F.col("offset")
-                ).alias("m")
-            )
-            .select("doc_id", "m.offset", "m.op", "m.shingles", "m.sig")
-        )
-        tmp_index = f"{self.index_path}.tmp-{run_id}"
-        merged.write.mode("overwrite").parquet(tmp_index)
-
-        # 3-4. pair maintenance, computed from the just-written index so the
-        # band join and the Jaccard verification see one consistent state
-        m = spark.read.parquet(tmp_index)
-        live = m.filter((F.col("op") != "d") & (F.size("shingles") > 0))
-        touched = latest.select("doc_id").distinct()
-        batch_live = live.join(touched, "doc_id", "leftsemi")
-        bb = batch_live.select("doc_id", F.posexplode("sig").alias("i", "h"))
-        lb = live.select(
-            F.col("doc_id").alias("other_id"), F.posexplode("sig").alias("i", "h")
-        )
-        cand = (
-            bb.join(lb, ["i", "h"])
-            .filter(F.col("doc_id") != F.col("other_id"))
-            .select(
-                F.least("doc_id", "other_id").alias("da"),
-                F.greatest("doc_id", "other_id").alias("db"),
-            )
-            .distinct()
-        )
-        sa = live.select(F.col("doc_id").alias("da"), F.col("shingles").alias("sa"))
-        sb = live.select(F.col("doc_id").alias("db"), F.col("shingles").alias("sb"))
-        ni = F.size(F.array_intersect(F.col("sa"), F.col("sb")))
-        jac = ni.cast("double") / (F.size("sa") + F.size("sb") - ni)
-        fresh = (
-            cand.join(sa, "da")
-            .join(sb, "db")
-            .withColumn("n_common", ni.cast("long"))
-            .withColumn("jaccard", jac)
-            .filter(F.col("jaccard") >= MINHASH_JACCARD_THRESHOLD)
-            .select(F.col("da").alias("doc_a"), F.col("db").alias("doc_b"), "n_common", "jaccard")
-        )
-        if os.path.isdir(self.pairs_path):
-            surviving = (
-                spark.read.parquet(self.pairs_path)
-                .join(touched.withColumnRenamed("doc_id", "doc_a"), "doc_a", "leftanti")
-                .join(touched.withColumnRenamed("doc_id", "doc_b"), "doc_b", "leftanti")
-                .select("doc_a", "doc_b", "n_common", "jaccard")
-            )
-        else:
-            surviving = spark.createDataFrame([], _PAIR_SCHEMA)
-        tmp_pairs = f"{self.pairs_path}.tmp-{run_id}"
-        # fresh pairs all touch a batch doc, surviving pairs touch none:
-        # the union is disjoint by construction, no dedup exchange needed
-        surviving.unionByName(fresh).coalesce(1).write.mode("overwrite").parquet(tmp_pairs)
-
-        # 5. commit both views (replay heals a crash between the swaps)
-        _commit_swap(self.index_path, tmp_index)
-        _commit_swap(self.pairs_path, tmp_pairs)
-
-    def pairs(self, spark: SparkSession) -> DataFrame:
-        """The live near-dup pair view."""
-        self._recover()
-        return spark.read.parquet(self.pairs_path)
-
-
 class _SigIndexSink(BucketedUpsertSink):
     """The LSH signature index in the bucketed copy-on-write layout:
     latest (doc_id, offset, op, shingles, sig) per document, bucketed by
-    ``pmod(hash(doc_id), n)`` — same merge semantics as the flat index
-    (tombstones retained), batch rows arrive pre-shaped."""
+    ``pmod(hash(doc_id), n)`` — latest-per-doc merge with tombstones
+    retained; batch rows arrive pre-shaped."""
 
     _KEY = "doc_id"
     _COLS = ["doc_id", "offset", "op", "shingles", "sig"]
@@ -188,7 +78,8 @@ class _SigIndexSink(BucketedUpsertSink):
 
 
 class BucketedMinHashIndexSink:
-    """The 100 TB form of :class:`MinHashIndexSink`: all three tables are
+    """Materialized LSH index + near-dup pair view over a document CDC
+    stream of (doc_id, offset, op, text).  All three tables are
     hash-bucketed with per-bucket copy-on-write through the journaled
     atomic commit, and the per-batch candidate probe reads ONLY the band
     buckets the batch's band keys hash into (dynamic partition pruning)
@@ -220,9 +111,9 @@ class BucketedMinHashIndexSink:
       (partitioned parquet cannot emit an empty dir) — dead rows are
       filtered from the view and dropped on the bucket's next rewrite.
 
-    Final ``pairs()`` must equal the flat sink's (and the from-scratch
-    batch ``dedup_minhash_lsh``) result — asserted by the equivalence
-    test and the ``sq_dedup_index_stream`` driver oracle.
+    Final ``pairs()`` must equal the from-scratch batch
+    ``dedup_minhash_lsh`` result over the live documents — asserted by
+    the tests and the ``sq_dedup_index_stream`` registry oracle.
     """
 
     def __init__(self, path: str, n_buckets: int = 16, read_only: bool = False) -> None:

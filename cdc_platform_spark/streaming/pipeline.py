@@ -17,12 +17,14 @@ delivery; sinks are idempotent (upsert = keyed merge; append = keyed
 dedup view), the same at-least-once + idempotency contract the
 reference documents (README.md:411-419).
 
-The upsert sink here merges into a keyed parquet state table (read +
-union + latest-per-key + atomic swap). On a lakehouse deployment the
-identical batch logic is one `MERGE INTO` on Iceberg/Delta — the
-in-batch dedup-by-latest then merge is exactly what this class does;
-parquet-swap is the container-friendly stand-in for the table format's
-transactional commit.
+The upsert sink here merges into a hash-bucketed keyed parquet state
+table (pruned read of the touched buckets + union + latest-per-key +
+journaled per-bucket commit); unbucketed state is the same sink with
+``n_buckets=1``. On a lakehouse deployment the identical batch logic is
+one `MERGE INTO` on Iceberg/Delta — the in-batch dedup-by-latest then
+merge is exactly what the sink does; the bucket-dir commit is the
+container-friendly stand-in for the table format's transactional
+commit.
 """
 
 from __future__ import annotations
@@ -106,13 +108,12 @@ def _sweep_stale_tmp(path: str) -> None:
 
 
 def _recover_swapped_dir(path: str, read_only: bool = False) -> None:
-    """Crash recovery for the two-rename swap protocol (shared by
-    UpsertSink and AggregatingSink): sweep stale tmp dirs, and if the live
-    dir is missing but a displaced ``.old-*`` snapshot exists (crash
-    between the renames), restore the newest one.  Restoring an older
-    state is safe under both sinks' merge semantics: the mid-swap batch
-    replays and re-merges (idempotent keyed merge / absent-from-meta
-    batch-id fence).
+    """Crash recovery for the two-rename swap protocol of single-dir
+    artifacts (the DLQ's purge rewrite, the persisted IVF quantizer, the
+    curated corpus's benchmark mirror): sweep stale tmp dirs, and if the
+    live dir is missing but a displaced ``.old-*`` snapshot exists (crash
+    between the renames), restore the newest one: the artifact is left as
+    it was before the interrupted rewrite, which its owner repeats.
 
     ``read_only=True`` (the serving-process form) performs NO filesystem
     mutation: tmp dirs are left for the writer (they may be its in-flight
@@ -248,10 +249,11 @@ def suggest_tombstone_horizon(
 
 
 def latest_per_key_merge(updates, current=None):
-    """THE latest-per-key upsert algebra — one definition shared by
-    UpsertSink and the lakehouse upsert sink (plans/compiler.py), so the
-    tie-break (offset desc per pk) and tombstone handling cannot drift:
-    keep the newest row per pk across current state + updates.
+    """THE latest-per-key upsert algebra, used by the lakehouse upsert
+    sink (plans/compiler.py) and by tests as the reference for the
+    bucketed merge, so the tie-break (offset desc per pk) and tombstone
+    handling cannot drift: keep the newest row per pk across current
+    state + updates.
 
     Null-op rows (undecodable frames that slipped past DLQ routing) are
     excluded from the UPDATES: a poison frame at the highest offset must
@@ -332,68 +334,27 @@ class RelationalAppendSink:
         )
 
 
-class UpsertSink:
-    """Latest-per-key merge materialization (ref J1/W2, sinks/iceberg.py:187-197).
+class BucketedUpsertSink:
+    """Latest-per-key merge materialization (ref J1/W2,
+    sinks/iceberg.py:187-197) with hash-bucketed state.
 
     Batch algebra (identical to a lakehouse MERGE INTO with a
-    `source.offset > target.offset` match condition):
-      1. in-batch dedup-by-latest on (pk) ordered by offset — the reference's
-         per-partition arrival order made explicit,
-      2. union with current state, keep latest per pk,
-      3. KEEP delete tombstones in the state (micro-batches from a file
-         source are not offset-ordered across files; dropping a tombstone
-         would let an older out-of-order update resurrect a deleted key),
-      4. transactional swap (here: write tmp + atomic dir rename).
-    ``state()`` exposes the live (non-tombstone) view.
-    """
+    ``source.offset > target.offset`` match condition): latest row per pk
+    by offset across the touched state and the batch, KEEPING delete
+    tombstones in the state (micro-batches from a file source are not
+    offset-ordered across files; dropping a tombstone would let an older
+    out-of-order update resurrect a deleted key).  ``state()`` exposes the
+    live (non-tombstone) view.
 
-    is_idempotent = True  # keyed merge: replaying a batch cannot double-apply
+    The state is laid out as ``path/bucket=<pmod(hash(pk), n)>/`` and a
+    batch rewrites ONLY the buckets its keys hash into: O(touched
+    buckets), the same copy-on-write granularity an Iceberg ``MERGE INTO``
+    achieves with bucket-partitioned tables (the reference's per-partition
+    compaction L3, lakehouse/maintenance.py:178-244, is the same
+    only-touch-what-changed principle).
 
-    def __init__(self, path: str) -> None:
-        self.path = path
-
-    def _recover(self) -> None:
-        _recover_swapped_dir(self.path)
-
-    def write(self, batch: DataFrame) -> None:
-        if not batch.take(1):
-            return  # empty micro-batch: nothing to merge
-        self._recover()
-        spark = batch.sparkSession
-        cols = ["pk", "offset", "op", "event_type", "value"]
-        # in-batch dedup-by-latest first (shrinks the union), then merge
-        # with state — both steps are the one shared merge algebra
-        updates = latest_per_key_merge(batch.select(*cols))
-        current = (
-            spark.read.parquet(self.path).select(*cols) if os.path.isdir(self.path) else None
-        )
-        merged = latest_per_key_merge(updates, current)
-        tmp = f"{self.path}.tmp-{uuid.uuid4().hex}"
-        merged.write.mode("overwrite").parquet(tmp)
-        _commit_swap(self.path, tmp)
-
-    def state(self, spark: SparkSession) -> DataFrame:
-        """Live state: latest row per key, tombstones filtered out."""
-        self._recover()
-        return spark.read.parquet(self.path).filter(F.col("op") != "d")
-
-
-class BucketedUpsertSink:
-    """Latest-per-key merge with hash-bucketed state: the scale form of
-    ``UpsertSink``.
-
-    ``UpsertSink`` rewrites the WHOLE state every micro-batch — O(state)
-    I/O per batch, which is fine for tests and fatal at 100 TB.  Here the
-    state is laid out as ``path/bucket=<pmod(hash(pk), n)>/`` and a batch
-    rewrites ONLY the buckets its keys hash into: O(touched buckets), the
-    same copy-on-write granularity an Iceberg ``MERGE INTO`` achieves with
-    bucket-partitioned tables (ref J1/W2, sinks/iceberg.py:187-197; the
-    reference's per-partition compaction L3, lakehouse/maintenance.py:178-244,
-    is the same only-touch-what-changed principle).
-
-    Merge semantics are identical to ``UpsertSink`` (latest per pk by
-    offset, tombstones retained against out-of-order micro-batches); only
-    the storage granularity differs.  The bucket function is Spark's
+    ``n_buckets=1`` is the unbucketed form: every batch rewrites the one
+    bucket, i.e. the whole state.  The bucket function is Spark's
     stable murmur3 ``hash()`` — consistent for the lifetime of one state
     directory, which is all a checkpointed pipeline needs.
     """
@@ -899,119 +860,17 @@ class _BucketStore(BucketedUpsertSink):
         self._commit_buckets(tmp, run_id, sorted(set(buckets)))
 
 
-class AggregatingSink:
-    """Incremental materialized AGGREGATE view over the CDC stream — the
-    aggregate-level complement of ``UpsertSink``'s row-level merge (the
-    reference materializes aggregates by re-querying the upserted table;
-    here the view maintains itself incrementally, one partial-aggregate
-    merge per micro-batch).
-
-    Batch algebra (all aggregates chosen mergeable/commutative):
-      1. partials = batch.groupBy(pk).agg(count, SUM(value) in DECIMAL,
-         min, max, max(offset)) — map-side combinable, one shuffle of the
-         BATCH only (never a rescan of raw history),
-      2. state' = (state ∪ partials).groupBy(pk).agg(merge) — decimal
-         sums make the end state independent of how events were split
-         across micro-batches,
-      3. transactional two-rename swap (same as UpsertSink).
-
-    foreachBatch delivery is at-least-once; an aggregate merge is NOT
-    naturally idempotent, so redelivery is fenced by batch id: the max
-    applied id is committed atomically WITH the state (an ``_agg_meta``
-    file inside the swapped directory — underscore-prefixed, so parquet
-    readers ignore it), and ``write`` skips any batch id at or below it —
-    the standard idempotent-foreachBatch transaction pattern (Delta's
-    txn appId/version fencing). A fresh pipeline run must pair a fresh
-    checkpoint with a fresh state path.
-
-    At 100 TB the state table is one row per key: partition the swap like
-    ``BucketedUpsertSink`` (state buckets touched by the batch's keys) or
-    land step 2 as a lakehouse MERGE; the batch algebra is unchanged.
-    """
-
-    wants_batch_id = True
-    # an aggregate merge double-applies on out-of-band redelivery: the
-    # batch-id fence only covers checkpointed foreachBatch delivery, NOT
-    # DlqWriter.replay (which calls write() with no batch id) — replay
-    # into this sink requires purge=True
-    is_idempotent = False
-    _COLS = ["pk", "n_events", "value_sum", "value_min", "value_max", "last_offset"]
-
-    def __init__(self, path: str) -> None:
-        self.path = path
-
-    def _recover(self) -> None:
-        _recover_swapped_dir(self.path)
-
-    def _meta_path(self) -> str:
-        return f"{self.path}/_agg_meta"
-
-    def _last_applied(self) -> int | None:
-        try:
-            with open(self._meta_path()) as fh:
-                return int(fh.read().strip())
-        except (OSError, ValueError):
-            return None
-
-    @staticmethod
-    def _partials(batch: DataFrame) -> DataFrame:
-        return batch.groupBy("pk").agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.sum(F.col("value").cast("decimal(18,2)")).alias("value_sum"),
-            F.min("value").alias("value_min"),
-            F.max("value").alias("value_max"),
-            F.max("offset").alias("last_offset"),
-        )
-
-    def write(self, batch: DataFrame, batch_id: int | None = None) -> None:
-        self._recover()
-        last = self._last_applied()
-        if batch_id is not None and last is not None and batch_id <= last:
-            return  # redelivered batch: already folded into the state
-        if not batch.take(1):
-            return
-        spark = batch.sparkSession
-        updates = self._partials(batch)
-        if os.path.isdir(self.path):
-            current = spark.read.parquet(self.path).select(*self._COLS)
-            merged = (
-                current.unionByName(updates)
-                .groupBy("pk")
-                .agg(
-                    F.sum("n_events").alias("n_events"),
-                    F.sum("value_sum").cast("decimal(18,2)").alias("value_sum"),
-                    F.min("value_min").alias("value_min"),
-                    F.max("value_max").alias("value_max"),
-                    F.max("last_offset").alias("last_offset"),
-                )
-            )
-        else:
-            merged = updates
-        tmp = f"{self.path}.tmp-{uuid.uuid4().hex}"
-        merged.select(*self._COLS).write.mode("overwrite").parquet(tmp)
-        if batch_id is not None:
-            with open(f"{tmp}/_agg_meta", "w") as fh:
-                fh.write(str(batch_id))
-        _commit_swap(self.path, tmp)
-
-    def state(self, spark: SparkSession) -> DataFrame:
-        """The live aggregate view (decimal sum surfaced as double)."""
-        self._recover()
-        return spark.read.parquet(self.path).select(
-            "pk",
-            "n_events",
-            F.col("value_sum").cast("double").alias("value_sum"),
-            "value_min",
-            "value_max",
-            "last_offset",
-        )
-
-
 class BucketedAggregatingSink(BucketedUpsertSink):
-    """The 100 TB form of ``AggregatingSink``: the materialized aggregate
-    view partitioned by ``pmod(hash(pk), n_buckets)`` with per-bucket
-    copy-on-write — a micro-batch reads and rewrites ONLY the buckets its
-    keys hash into (the upgrade path AggregatingSink's docstring pins).
+    """Incremental materialized AGGREGATE view over the CDC stream — the
+    aggregate-level complement of ``BucketedUpsertSink``'s row-level merge
+    (the reference materializes aggregates by re-querying the upserted
+    table; here the view maintains itself, one partial-aggregate merge per
+    micro-batch).  Every aggregate is mergeable (count, DECIMAL sum, min,
+    max, max offset), so the end state is independent of how events were
+    split across micro-batches.  The view is partitioned by
+    ``pmod(hash(pk), n_buckets)`` with per-bucket copy-on-write — a
+    micro-batch reads and rewrites ONLY the buckets its keys hash into;
+    ``n_buckets=1`` is the unbucketed form.
 
     Fully executor-side per micro-batch:
       1. batch rows are SHAPED map-only into partial-aggregate form
@@ -1032,14 +891,19 @@ class BucketedAggregatingSink(BucketedUpsertSink):
          own ``_agg_meta`` (underscore-prefixed — parquet readers skip
          it) committed atomically with the bucket's rename inside the
          journaled all-or-nothing ``_commit_buckets``, and a replayed
-         batch is filtered to the buckets that have not applied it.
+         batch is filtered to the buckets that have not applied it (the
+         idempotent-foreachBatch transaction pattern, as Delta's txn
+         appId/version fencing).  A fresh pipeline run must pair a fresh
+         checkpoint with a fresh state path.
     """
 
     wants_batch_id = True
-    # same replay caveat as AggregatingSink: the per-bucket fence does not
-    # apply to out-of-band (no-batch-id) replays
+    # an aggregate merge double-applies on out-of-band redelivery: the
+    # batch-id fence only covers checkpointed foreachBatch delivery, NOT
+    # DlqWriter.replay (which calls write() with no batch id) — replay
+    # into this sink requires purge=True
     is_idempotent = False
-    _COLS = AggregatingSink._COLS
+    _COLS = ["pk", "n_events", "value_sum", "value_min", "value_max", "last_offset"]
 
     def __init__(self, path: str, n_buckets: int = 16) -> None:
         super().__init__(path, n_buckets)
@@ -1169,8 +1033,8 @@ class DlqWriter:
         self.replayed_path = f"{path}_replayed"
 
     def _recover(self) -> None:
-        # replay(purge=True) commits via the same two-rename swap as the
-        # sinks; a crash between the renames would otherwise leave the
+        # replay(purge=True) commits via the two-rename swap
+        # (_commit_swap); a crash between the renames would otherwise leave the
         # quarantine path missing and orphan pre-crash rows in .old-*
         if os.path.isdir(os.path.dirname(self.path) or "."):
             _recover_swapped_dir(self.path)
@@ -1236,11 +1100,11 @@ class DlqWriter:
         ``purge=True`` removes the replayed rows from the quarantine table
         after a successful sink write (two-rename swap), so a repeated
         replay invocation is a no-op.  REQUIRED when the target sink
-        declares ``is_idempotent = False`` (AggregatingSink and
-        BucketedAggregatingSink — their batch-id fences cover only
-        checkpointed foreachBatch delivery, not this out-of-band path,
-        which calls ``write`` with no batch id); optional for idempotent
-        sinks, where it only keeps the quarantine table from re-sending.
+        declares ``is_idempotent = False`` (BucketedAggregatingSink — its
+        batch-id fence covers only checkpointed foreachBatch delivery, not
+        this out-of-band path, which calls ``write`` with no batch id);
+        optional for idempotent sinks, where it only keeps the quarantine
+        table from re-sending.
         """
         q = self.read(spark)
         if sink_id is not None:
@@ -1329,8 +1193,8 @@ class TopicRouterSink:
     multiplexing path — one stream, N destination tables."""
 
     # the router must RECEIVE the micro-batch id so it can forward it to
-    # routed sinks that fence on it (AggregatingSink) — otherwise routing
-    # through it silently disabled their redelivery protection
+    # routed sinks that fence on it (BucketedAggregatingSink) — otherwise
+    # routing through it silently disabled their redelivery protection
     wants_batch_id = True
 
     def __init__(self, routes: dict[str, object], fallback: object | None = None) -> None:
@@ -1427,7 +1291,7 @@ class CdcPipeline:
         for sink_id, sink in self.sinks.items():
             try:
                 if getattr(sink, "wants_batch_id", False):
-                    # batch-id-fenced sinks (AggregatingSink) need the
+                    # batch-id-fenced sinks (BucketedAggregatingSink) need the
                     # micro-batch id to make their merge idempotent
                     # under at-least-once redelivery
                     sink.write(env, batch_id=batch_id)

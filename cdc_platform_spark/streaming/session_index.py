@@ -430,8 +430,8 @@ class BucketedSessionStatsSink:
 
     def sessions_from_scratch(self, spark: SparkSession) -> DataFrame:
         """The FLAT form: full recompute from the authoritative per-event
-        index (O(state) — the UpsertSink-style shape a test deployment
-        runs).  The bucketed serve view must equal this after every batch
+        index (O(state) — a whole-state rewrite, the shape a test
+        deployment runs).  The bucketed serve view must equal this after every batch
         — the flat-vs-bucketed equivalence anchor."""
         self._recover()
         live = (

@@ -1,8 +1,8 @@
 """Custom stateful streaming operator via ``applyInPandasWithState``.
 
-The memory-side counterpart to the storage-side UpsertSink: per-key
-state maintained by Spark's state store across micro-batches.  The
-engine uses MERGE/UpsertSink for the 100 TB latest-per-key path
+The memory-side counterpart to the storage-side BucketedUpsertSink:
+per-key state maintained by Spark's state store across micro-batches.
+The engine uses MERGE/BucketedUpsertSink for the 100 TB latest-per-key path
 (storage-side state, SURVEY.md §7 risk register); this operator covers
 the cases that genuinely need in-flight state — running counters,
 custom session logic — and demonstrates the
@@ -76,7 +76,7 @@ try:  # Spark >= 4.0
         in-flight state instead of storage-side MERGE): per pk keep the
         row with the highest offset; a delete op becomes a tombstone that
         only a LATER offset can resurrect — identical tie/ordering rules
-        to UpsertSink (order key = offset, FIXTURES.md §2c)."""
+        to BucketedUpsertSink (order key = offset, FIXTURES.md §2c)."""
 
         SCHEMA = "offset long, op string, event_type string, value double"
 

@@ -1,6 +1,7 @@
-"""IvfIndexSink: incremental inverted-file maintenance must converge to
-the batch rebuild under any micro-batch split, tombstone deletes, and
-survive the swap crash-window (same protocol as the upsert sinks)."""
+"""BucketedIvfIndexSink: incremental inverted-file maintenance must
+converge to the batch rebuild under any micro-batch split, tombstone
+deletes, and survive the commit crash-window (same protocol as the
+upsert sinks)."""
 
 from __future__ import annotations
 
@@ -8,6 +9,8 @@ import os
 
 import pyspark.sql.functions as F  # noqa: N812
 import pytest
+
+from cdc_platform_spark.operators.dedup import dot_long
 
 from .conftest import SF_SMOKE
 
@@ -42,28 +45,86 @@ def _cdc_rows(e):
     return wave0.unionByName(upd).unionByName(dels)
 
 
+def _live_vectors(rows):
+    """The post-CDC corpus: latest version of each vector, deletes dropped."""
+    return (
+        rows.groupBy("vec_id")
+        .agg(F.max_by(F.struct("offset", "op", "a"), F.col("offset")).alias("m"))
+        .select("vec_id", "m.op", "m.a")
+        .filter(F.col("op") != "d")
+        .withColumn("norm", dot_long(F.col("a"), F.col("a")))
+    )
+
+
+def _cell_cosines(live, cents):
+    return live.crossJoin(F.broadcast(cents)).select(
+        "vec_id",
+        "cent_id",
+        (dot_long(F.col("a"), F.col("ca")) / (F.sqrt("norm") * F.sqrt("cn"))).alias("c"),
+    )
+
+
+def _batch_cells(live, cents):
+    """(vec_id, cell): the from-scratch IVF assignment of the live vectors
+    under the frozen centroids — max cosine, lowest cent_id on ties."""
+    return _cell_cosines(live, cents).groupBy("vec_id").agg(
+        F.max_by("cent_id", F.struct(F.col("c"), (-F.col("cent_id")).alias("t"))).alias("cell")
+    )
+
+
+def _batch_codes(live, codebooks, ranks) -> dict:
+    """vec_id -> PQ code string: the batch encode (sim_quantize_pq's
+    subvector split, min squared L2 per subspace, lowest cent_id on ties)
+    of the live vectors, packed in Python."""
+    from cdc_platform_spark.operators.similarity import _l2_long, pq_subvectors
+
+    best = (
+        pq_subvectors(live.select("vec_id", "a"))
+        .join(F.broadcast(codebooks), "sub")
+        .select("vec_id", "sub", "cent_id", _l2_long(F.col("sa"), F.col("ca")).alias("d"))
+        .groupBy("vec_id", "sub")
+        .agg(F.min_by("cent_id", F.struct("d", "cent_id")).alias("cent_id"))
+        .join(ranks, "cent_id")
+    )
+    per_vec: dict[int, dict[int, int]] = {}
+    for r in best.collect():
+        per_vec.setdefault(r["vec_id"], {})[r["sub"]] = r["code"]
+    return {v: ",".join(str(c[k]) for k in sorted(c)) for v, c in per_vec.items()}
+
+
+def _expected_index(rows, cents):
+    return sorted(map(tuple, _batch_cells(_live_vectors(rows), cents).collect()))
+
+
+def _expected_pq_index(rows, cents, codebooks, ranks):
+    live = _live_vectors(rows)
+    codes = _batch_codes(live, codebooks, ranks)
+    return sorted(
+        (r["vec_id"], r["cell"], codes[r["vec_id"]]) for r in _batch_cells(live, cents).collect()
+    )
+
+
 def test_index_converges_under_any_batching(spark, tmp_path, trained):
-    from cdc_platform_spark.streaming.ann_index import IvfIndexSink
+    """The unbucketed form (one bucket) converges to the batch assignment
+    of the live vectors when the waves are split across micro-batches."""
+    from cdc_platform_spark.streaming.ann_index import BucketedIvfIndexSink
 
     e, cents = trained
     rows = _cdc_rows(e).localCheckpoint(eager=True)
-
-    whole = IvfIndexSink(str(tmp_path / "one"), cents)
-    whole.write(rows)
-    expected = sorted(map(tuple, whole.state(spark).collect()))
+    expected = _expected_index(rows, cents)
     assert expected, "index must be non-empty"
 
-    split = IvfIndexSink(str(tmp_path / "many"), cents)
+    split = BucketedIvfIndexSink(str(tmp_path / "many"), cents, n_buckets=1)
     for k in range(3):  # deliberately interleaves waves across batches
         split.write(rows.filter(F.pmod(F.col("offset"), F.lit(3)) == k))
     assert sorted(map(tuple, split.state(spark).collect())) == expected
 
 
 def test_deletes_tombstone_and_updates_reassign(spark, tmp_path, trained):
-    from cdc_platform_spark.streaming.ann_index import IvfIndexSink
+    from cdc_platform_spark.streaming.ann_index import BucketedIvfIndexSink
 
     e, cents = trained
-    sink = IvfIndexSink(str(tmp_path / "idx"), cents)
+    sink = BucketedIvfIndexSink(str(tmp_path / "idx"), cents, n_buckets=1)
     sink.write(_cdc_rows(e))
     state = {r["vec_id"]: r["cell"] for r in sink.state(spark).collect()}
     deleted = [r["vec_id"] for r in e.filter(F.col("vec_id") % 5 == 1).collect()]
@@ -72,14 +133,16 @@ def test_deletes_tombstone_and_updates_reassign(spark, tmp_path, trained):
 
 
 def test_index_crash_recovery(spark, tmp_path, trained):
-    from cdc_platform_spark.streaming.ann_index import IvfIndexSink
+    """Crash between a bucket's two renames leaves its snapshot displaced
+    into the .work dir; the next read restores it."""
+    from cdc_platform_spark.streaming.ann_index import BucketedIvfIndexSink
 
     e, cents = trained
-    sink = IvfIndexSink(str(tmp_path / "idx"), cents)
+    sink = BucketedIvfIndexSink(str(tmp_path / "idx"), cents, n_buckets=1)
     sink.write(_cdc_rows(e))
     expected = sorted(map(tuple, sink.state(spark).collect()))
-    # crash between the two swap renames: live dir displaced
-    os.rename(str(tmp_path / "idx"), str(tmp_path / "idx.old-deadbeef"))
+    os.makedirs(sink._work, exist_ok=True)
+    os.rename(sink._bucket_dir(0), f"{sink._work}/bucket=0.old-deadbeef")
     assert sorted(map(tuple, sink.state(spark).collect())) == expected
 
 
@@ -103,18 +166,17 @@ def pq_trained(spark, trained):
 
 
 def test_pq_index_converges_under_any_batching(spark, tmp_path, trained, pq_trained):
-    from cdc_platform_spark.streaming.ann_index import IvfPqIndexSink
+    """The unbucketed PQ index converges to the batch (cell, codes) of the
+    live vectors under a split delivery."""
+    from cdc_platform_spark.streaming.ann_index import BucketedIvfPqIndexSink
 
     e, _ = trained
     cents, codebooks, ranks = pq_trained
     rows = _cdc_rows(e).localCheckpoint(eager=True)
-
-    whole = IvfPqIndexSink(str(tmp_path / "one"), cents, codebooks, ranks)
-    whole.write(rows)
-    expected = sorted(map(tuple, whole.state(spark).collect()))
+    expected = _expected_pq_index(rows, cents, codebooks, ranks)
     assert expected and all(r[2].count(",") == 7 for r in expected)  # 8 codes each
 
-    split = IvfPqIndexSink(str(tmp_path / "many"), cents, codebooks, ranks)
+    split = BucketedIvfPqIndexSink(str(tmp_path / "many"), cents, codebooks, ranks, n_buckets=1)
     for k in range(3):
         split.write(rows.filter(F.pmod(F.col("offset"), F.lit(3)) == k))
     assert sorted(map(tuple, split.state(spark).collect())) == expected
@@ -124,43 +186,35 @@ def test_pq_codes_not_mixed_when_versions_share_a_batch(spark, tmp_path, trained
     """Regression: insert + update of one vector in the SAME micro-batch
     must encode each version separately — the surviving row's codes are
     the update's codes, not a mix of both versions' subvectors."""
-    from cdc_platform_spark.streaming.ann_index import IvfPqIndexSink
+    from cdc_platform_spark.streaming.ann_index import BucketedIvfPqIndexSink
 
     e, _ = trained
     cents, codebooks, ranks = pq_trained
     one = e.filter(F.col("vec_id") == 0)
-    both = one.select(
-        "vec_id", F.lit(1).alias("offset"), F.lit("c").alias("op"), "a"
-    ).unionByName(
-        one.select("vec_id", F.lit(2).alias("offset"), F.lit("u").alias("op"), F.reverse("a").alias("a"))
+    update = one.select(
+        "vec_id", F.lit(2).alias("offset"), F.lit("u").alias("op"), F.reverse("a").alias("a")
     )
-    mixed = IvfPqIndexSink(str(tmp_path / "mixed"), cents, codebooks, ranks)
+    both = one.select("vec_id", F.lit(1).alias("offset"), F.lit("c").alias("op"), "a").unionByName(
+        update
+    )
+    mixed = BucketedIvfPqIndexSink(str(tmp_path / "mixed"), cents, codebooks, ranks, n_buckets=1)
     mixed.write(both)
-    clean = IvfPqIndexSink(str(tmp_path / "clean"), cents, codebooks, ranks)
-    clean.write(
-        one.select("vec_id", F.lit(2).alias("offset"), F.lit("u").alias("op"), F.reverse("a").alias("a"))
-    )
-    assert (
-        mixed.state(spark).collect()[0]["codes"]
-        == clean.state(spark).collect()[0]["codes"]
-    )
+    assert mixed.state(spark).collect()[0]["codes"] == _expected_pq_index(
+        update, cents, codebooks, ranks
+    )[0][2]
 
 
 def test_bucketed_pq_index_matches_flat_and_rewrites_only_touched(spark, tmp_path, trained, pq_trained):
-    """BucketedIvfPqIndexSink must equal IvfPqIndexSink's final (cell,
-    codes) state under any batching, and a single-vector batch must leave
-    every bucket its key does not hash into physically untouched."""
-    import os
-
-    from cdc_platform_spark.streaming.ann_index import BucketedIvfPqIndexSink, IvfPqIndexSink
+    """BucketedIvfPqIndexSink must equal the flat batch (cell, codes)
+    encode of the live vectors under any batching, and a single-vector
+    batch must leave every bucket its key does not hash into physically
+    untouched."""
+    from cdc_platform_spark.streaming.ann_index import BucketedIvfPqIndexSink
 
     e, _ = trained
     cents, codebooks, ranks = pq_trained
     rows = _cdc_rows(e).localCheckpoint(eager=True)
-
-    flat = IvfPqIndexSink(str(tmp_path / "flat"), cents, codebooks, ranks)
-    flat.write(rows)
-    expected = sorted(map(tuple, flat.state(spark).collect()))
+    expected = _expected_pq_index(rows, cents, codebooks, ranks)
     assert expected and all(r[2].count(",") == 7 for r in expected)
 
     bkt = BucketedIvfPqIndexSink(str(tmp_path / "bkt"), cents, codebooks, ranks, n_buckets=8)
@@ -193,7 +247,6 @@ def test_flat_index_search_matches_batch_ivf_recipe(spark, tmp_path, trained):
     post-CDC corpus — the index answers queries, not just rebuild diffs."""
     from pyspark.sql import Window
 
-    from cdc_platform_spark.operators.dedup import dot_long
     from cdc_platform_spark.operators.similarity import N_PROBE, N_PROBES, TOP_K
     from cdc_platform_spark.streaming.ann_index import (
         BucketedIvfFlatIndexSink,
@@ -209,21 +262,9 @@ def test_flat_index_search_matches_batch_ivf_recipe(spark, tmp_path, trained):
     got = sorted(map(tuple, ivf_search_from_index(sink.state(spark), cents).collect()))
 
     # batch oracle: the live post-CDC vectors through the same IVF math
-    live = (
-        rows.groupBy("vec_id")
-        .agg(F.max_by(F.struct("offset", "op", "a"), F.col("offset")).alias("m"))
-        .select("vec_id", "m.op", "m.a")
-        .filter(F.col("op") != "d")
-        .withColumn("norm", dot_long(F.col("a"), F.col("a")))
-    )
-    vc = live.crossJoin(F.broadcast(cents)).select(
-        "vec_id",
-        "cent_id",
-        (dot_long(F.col("a"), F.col("ca")) / (F.sqrt("norm") * F.sqrt("cn"))).alias("c"),
-    )
-    assign = vc.groupBy("vec_id").agg(
-        F.max_by("cent_id", F.struct(F.col("c"), (-F.col("cent_id")).alias("t"))).alias("cell")
-    )
+    live = _live_vectors(rows)
+    vc = _cell_cosines(live, cents)
+    assign = _batch_cells(live, cents)
     w_probe = Window.partitionBy("vec_id").orderBy(F.col("c").desc(), F.col("cent_id"))
     probes = (
         vc.filter(F.col("vec_id") < N_PROBES)
@@ -260,19 +301,14 @@ def test_flat_index_search_matches_batch_ivf_recipe(spark, tmp_path, trained):
 
 
 def test_bucketed_index_matches_flat_and_rewrites_only_touched(spark, tmp_path, trained):
-    """BucketedIvfIndexSink must equal IvfIndexSink's final state under any
-    batching, and a single-vector batch must leave every bucket its key
-    does not hash into physically untouched."""
-    import os
-
-    from cdc_platform_spark.streaming.ann_index import BucketedIvfIndexSink, IvfIndexSink
+    """BucketedIvfIndexSink must equal the flat batch assignment of the
+    live vectors under any batching, and a single-vector batch must leave
+    every bucket its key does not hash into physically untouched."""
+    from cdc_platform_spark.streaming.ann_index import BucketedIvfIndexSink
 
     e, cents = trained
     rows = _cdc_rows(e).localCheckpoint(eager=True)
-
-    flat = IvfIndexSink(str(tmp_path / "flat"), cents)
-    flat.write(rows)
-    expected = sorted(map(tuple, flat.state(spark).collect()))
+    expected = _expected_index(rows, cents)
 
     bkt = BucketedIvfIndexSink(str(tmp_path / "bkt"), cents, n_buckets=8)
     for k in range(3):
@@ -661,8 +697,6 @@ def test_drift_report_degrades_under_cdc_and_recovers_after_rotation(spark, tmp_
     assert drifted < healthy, f"drift did not register: {drifted} vs {healthy}"
 
     # blue/green rotation under retrained centroids restores alignment
-    from cdc_platform_spark.operators.dedup import dot_long
-
     post_vecs = sink.state(spark).select(
         "vec_id", "a", dot_long(F.col("a"), F.col("a")).alias("norm")
     ).localCheckpoint(eager=True)
@@ -681,7 +715,6 @@ def test_recon_error_degrades_under_cdc_and_recovers_after_rotation(spark, tmp_p
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
-    from cdc_platform_spark.operators.dedup import dot_long
     from cdc_platform_spark.operators.similarity import (
         _fixed_embeddings,
         pq_seeds,

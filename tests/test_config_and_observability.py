@@ -111,6 +111,20 @@ sinks:
     assert sink.state(spark).count() == expected.count()
 
 
+def test_config_upsert_without_state_buckets_compiles_one_bucket(spark):
+    """Unbucketed upsert state is the bucketed sink with one bucket."""
+    from cdc_platform_spark.streaming.pipeline import BucketedUpsertSink
+
+    cfg = PipelineConfig(
+        pipeline_id="demo",
+        source=SourceConfig(path="/src"),
+        checkpoint_dir="/ck",
+        sinks=[SinkConfig(id="state", type="upsert", path="/state")],
+    )
+    sink = compile_pipeline(spark, cfg).sinks["state"]
+    assert isinstance(sink, BucketedUpsertSink) and sink.n_buckets == 1
+
+
 def test_config_maintenance_cadence_compiles_and_sweeps(spark, tmp_path, monkeypatch):
     """maintenance_every_n_batches from YAML wires the scheduled sweep;
     compact() runs on cadence (observable via the bucketed sink's

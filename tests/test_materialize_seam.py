@@ -36,6 +36,10 @@ def test_materialize_local_default_truncates_lineage(spark):
     assert "Scan ExistingRDD" in explain_text(out)
 
 
+def _ckpt_files(d) -> list[str]:
+    return [os.path.join(root, f) for root, _, files in os.walk(d) for f in files]
+
+
 def test_materialize_reliable_env_switch(spark, tmp_path, monkeypatch):
     spark.sparkContext.setCheckpointDir(str(tmp_path / "ckpt"))
     monkeypatch.setenv("SPARK_GRAFT_RELIABLE_CHECKPOINT", "1")
@@ -43,33 +47,37 @@ def test_materialize_reliable_env_switch(spark, tmp_path, monkeypatch):
     out = materialize(df, eager=True)
     assert sorted(r["x"] for r in out.collect()) == list(range(1, 51))
     # the reliable path writes checkpoint files to the durable dir
-    ckpt_files = [
-        os.path.join(root, f)
-        for root, _, files in os.walk(tmp_path / "ckpt")
-        for f in files
-    ]
-    assert ckpt_files, "reliable checkpoint wrote nothing to the checkpoint dir"
+    assert _ckpt_files(tmp_path / "ckpt"), "reliable checkpoint wrote nothing to the checkpoint dir"
+
+
+@pytest.mark.parametrize("value", ["0", "false", "FALSE", "False"])
+def test_materialize_env_switch_off_values_stay_local(spark, tmp_path, monkeypatch, value):
+    """Every spelling of "off" keeps the local checkpoint: the env value
+    is compared case-insensitively."""
+    spark.sparkContext.setCheckpointDir(str(tmp_path / "ckpt_off"))
+    monkeypatch.setenv("SPARK_GRAFT_RELIABLE_CHECKPOINT", value)
+    out = materialize(spark.range(10), eager=True)
+    assert out.count() == 10
+    assert not _ckpt_files(tmp_path / "ckpt_off"), f"{value!r} engaged the reliable checkpoint"
 
 
 def test_materialize_reliable_conf_switch(spark, tmp_path):
+    """The session conf is read on every call, so flipping it mid-session
+    takes effect on the next materialization in both directions."""
     spark.sparkContext.setCheckpointDir(str(tmp_path / "ckpt2"))
-    had_cache = hasattr(spark, "_cdc_reliable_checkpoint")
     try:
-        if had_cache:
-            del spark._cdc_reliable_checkpoint
         spark.conf.set("spark.cdc.reliableCheckpoint", "true")
         out = materialize(spark.range(10), eager=True)
         assert out.count() == 10
-        ckpt_files = [
-            os.path.join(root, f)
-            for root, _, files in os.walk(tmp_path / "ckpt2")
-            for f in files
-        ]
-        assert ckpt_files, "conf switch did not engage the reliable checkpoint"
+        n_files = len(_ckpt_files(tmp_path / "ckpt2"))
+        assert n_files, "conf switch did not engage the reliable checkpoint"
+        spark.conf.set("spark.cdc.reliableCheckpoint", "false")
+        assert materialize(spark.range(10), eager=True).count() == 10
+        assert len(_ckpt_files(tmp_path / "ckpt2")) == n_files, (
+            "conf switched off mid-session still wrote a reliable checkpoint"
+        )
     finally:
         spark.conf.set("spark.cdc.reliableCheckpoint", "false")
-        if hasattr(spark, "_cdc_reliable_checkpoint"):
-            del spark._cdc_reliable_checkpoint
 
 
 def test_sorted_view_plan_child_seam(spark):

@@ -15,7 +15,9 @@ from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
-from cdc_platform_spark.streaming.pipeline import BucketedUpsertSink, UpsertSink
+from cdc_platform_spark.streaming.pipeline import BucketedUpsertSink
+
+from .conftest import minhash_batch_pairs
 
 # events: (offset unique, pk small domain, op in c/u/d)
 events_strategy = st.lists(
@@ -45,11 +47,7 @@ def mkdf(spark):
     return make
 
 
-@pytest.mark.parametrize(
-    "mk_sink",
-    [UpsertSink, lambda p: BucketedUpsertSink(p, n_buckets=4)],
-    ids=["full_rewrite", "bucketed"],
-)
+@pytest.mark.parametrize("n_buckets", [1, 4], ids=["one_bucket", "bucketed"])
 @given(
     events=events_strategy,
     split_seed=st.integers(0, 2**16),
@@ -63,7 +61,7 @@ def mkdf(spark):
     suppress_health_check=[HealthCheck.function_scoped_fixture, HealthCheck.too_slow],
 )
 def test_merge_converges_under_any_batching(
-    spark, tmp_path_factory, mkdf, mk_sink, events, split_seed, n_batches, shuffle_batches, replay_suffix
+    spark, tmp_path_factory, mkdf, n_buckets, events, split_seed, n_batches, shuffle_batches, replay_suffix
 ):
     import random
 
@@ -77,7 +75,7 @@ def test_merge_converges_under_any_batching(
     if shuffle_batches:
         rng.shuffle(batches)
 
-    sink = mk_sink(str(tmp_path_factory.mktemp("prop") / "state"))
+    sink = BucketedUpsertSink(str(tmp_path_factory.mktemp("prop") / "state"), n_buckets=n_buckets)
     for batch in batches:
         if batch:
             sink.write(mkdf(batch))
@@ -145,7 +143,7 @@ def test_merge_with_tombstone_gc_converges(
     suppress_health_check=[HealthCheck.function_scoped_fixture, HealthCheck.too_slow],
 )
 def test_single_batch_equals_oracle(spark, tmp_path_factory, mkdf, events):
-    sink = UpsertSink(str(tmp_path_factory.mktemp("prop1") / "state"))
+    sink = BucketedUpsertSink(str(tmp_path_factory.mktemp("prop1") / "state"), n_buckets=1)
     sink.write(mkdf(events))
     expected = oracle_state(events)
     got = {
@@ -258,19 +256,14 @@ def agg_oracle(events: list[tuple[int, int, str, int]]) -> dict[int, tuple]:
     return {pk: tuple(a) for pk, a in out.items()}
 
 
-@pytest.fixture(params=["flat", "bucketed"], ids=["flat", "bucketed"])
+@pytest.fixture(params=[1, 4], ids=["one_bucket", "bucketed"])
 def agg_sink_cls(request):
-    """Both fence shapes: AggregatingSink's whole-view _agg_meta and
-    BucketedAggregatingSink's per-bucket metas under the journaled
-    atomic commit — identical convergence contract."""
-    from cdc_platform_spark.streaming.pipeline import (
-        AggregatingSink,
-        BucketedAggregatingSink,
-    )
+    """One bucket (the whole view behind one fence) and several buckets
+    (per-bucket fences under the journaled atomic commit) — identical
+    convergence contract."""
+    from cdc_platform_spark.streaming.pipeline import BucketedAggregatingSink
 
-    if request.param == "flat":
-        return AggregatingSink
-    return lambda path: BucketedAggregatingSink(path, n_buckets=4)
+    return lambda path: BucketedAggregatingSink(path, n_buckets=request.param)
 
 
 @given(
@@ -289,8 +282,7 @@ def test_aggregating_sink_converges_under_any_batching(
     """Incremental aggregate maintenance must reach the one-shot batch
     aggregate under ANY split of the log into micro-batches, with the
     just-committed batch optionally redelivered (at-least-once) — the
-    batch-id fence (whole-view or per-bucket) must make redelivery a
-    no-op."""
+    per-bucket batch-id fence must make redelivery a no-op."""
     import random
 
     rng = random.Random(split_seed)
@@ -329,16 +321,14 @@ def test_aggregating_sink_converges_under_any_batching(
 def test_bucketed_minhash_index_converges_on_random_cdc(
     spark, tmp_path_factory, n_docs, word_picks, change_ops, split_seed, n_batches
 ):
-    """The bucketed near-dup index must equal the flat sink's pair view
-    for ARBITRARY small corpora (tiny vocab forces genuine near-dup
-    collisions), arbitrary update/delete patterns, and any batching —
-    the property form of the fixture-based equivalence tests."""
+    """The bucketed near-dup index must equal the batch operator's pair
+    set over the live documents for ARBITRARY small corpora (tiny vocab
+    forces genuine near-dup collisions), arbitrary update/delete
+    patterns, and any batching — the property form of the fixture-based
+    equivalence tests."""
     import random
 
-    from cdc_platform_spark.streaming.dedup_index import (
-        BucketedMinHashIndexSink,
-        MinHashIndexSink,
-    )
+    from cdc_platform_spark.streaming.dedup_index import BucketedMinHashIndexSink
 
     rng = random.Random(split_seed)
     vocab = ["alpha", "beta", "gamma", "delta", "epsilon"]
@@ -362,9 +352,7 @@ def test_bucketed_minhash_index_converges_on_random_cdc(
         events, "doc_id long, offset long, op string, text string"
     ).localCheckpoint(eager=True)
 
-    flat = MinHashIndexSink(str(tmp_path_factory.mktemp("mh") / "flat"))
-    flat.write(rows)
-    expected = sorted(map(tuple, flat.pairs(spark).collect()))
+    expected = minhash_batch_pairs(spark, rows, str(tmp_path_factory.mktemp("mh")))
 
     bkt = BucketedMinHashIndexSink(
         str(tmp_path_factory.mktemp("mh") / "bkt"), n_buckets=4
@@ -469,16 +457,13 @@ def test_pair_view_gc_fence_on_random_cdc(
 ):
     """The pair view's dead markers + the index's GC fence under random
     CDC: with compaction at truthful horizons interleaved and delivered
-    batches replayed after GC, the pair view still equals the flat
-    single-delivery result and no deleted doc resurfaces in the live
+    batches replayed after GC, the pair view still equals the batch
+    operator over the live documents and no deleted doc resurfaces in the live
     index (the replay-watermark fence must hold for the PAIR store's
     derived content too, not just the keyed upsert)."""
     import random
 
-    from cdc_platform_spark.streaming.dedup_index import (
-        BucketedMinHashIndexSink,
-        MinHashIndexSink,
-    )
+    from cdc_platform_spark.streaming.dedup_index import BucketedMinHashIndexSink
 
     rng = random.Random(split_seed)
     vocab = ["alpha", "beta", "gamma", "delta", "epsilon"]
@@ -499,9 +484,9 @@ def test_pair_view_gc_fence_on_random_cdc(
         off += 1
     schema = "doc_id long, offset long, op string, text string"
 
-    flat = MinHashIndexSink(str(tmp_path_factory.mktemp("mhgc") / "flat"))
-    flat.write(spark.createDataFrame(events, schema))
-    expected = sorted(map(tuple, flat.pairs(spark).collect()))
+    expected = minhash_batch_pairs(
+        spark, spark.createDataFrame(events, schema), str(tmp_path_factory.mktemp("mhgc"))
+    )
 
     bkt = BucketedMinHashIndexSink(
         str(tmp_path_factory.mktemp("mhgc") / "bkt"), n_buckets=4

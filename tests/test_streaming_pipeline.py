@@ -23,9 +23,11 @@ from pyspark.sql import functions as F
 from cdc_platform_spark.operators import load_all
 from cdc_platform_spark.streaming.pipeline import (
     AppendSink,
+    BucketedAggregatingSink,
+    BucketedUpsertSink,
     CdcPipeline,
     DlqWriter,
-    UpsertSink,
+    latest_per_key_merge,
     to_envelope,
 )
 from cdc_platform_spark.streaming.windows import session_counts, tumbling_counts
@@ -62,7 +64,7 @@ def _pipeline(spark, workdir, sinks, dlq=None, **kw):
 
 def test_append_and_upsert_match_batch_oracle(spark, workdir):
     append = AppendSink(f"{workdir}/append")
-    upsert = UpsertSink(f"{workdir}/state")
+    upsert = BucketedUpsertSink(f"{workdir}/state", n_buckets=1)
     pipe = _pipeline(spark, workdir, {"append": append, "upsert": upsert}, max_files_per_trigger=1)
     pipe.run_available_now()
 
@@ -91,7 +93,7 @@ def test_append_and_upsert_match_batch_oracle(spark, workdir):
 
 
 def test_per_sink_failure_isolated_and_quarantined(spark, workdir):
-    good = UpsertSink(f"{workdir}/state")
+    good = BucketedUpsertSink(f"{workdir}/state", n_buckets=1)
     poison = AppendSink(f"{workdir}/poison", fail_predicate="op = 'd'")
     dlq = DlqWriter(f"{workdir}/dlq")
     pipe = _pipeline(spark, workdir, {"good": good, "poison": poison}, dlq=dlq)
@@ -123,7 +125,7 @@ def test_replay_from_checkpoint_no_duplicates(spark, workdir):
     """Re-running with the same checkpoint must be a no-op; re-running after a
     partial checkpoint wipe must not corrupt idempotent sinks (SQ7/J4)."""
     append = AppendSink(f"{workdir}/append")
-    upsert = UpsertSink(f"{workdir}/state")
+    upsert = BucketedUpsertSink(f"{workdir}/state", n_buckets=1)
     pipe = _pipeline(spark, workdir, {"append": append, "upsert": upsert})
     pipe.run_available_now()
     n_events = spark.read.parquet(f"{SF_SMOKE}/events.parquet").count()
@@ -334,32 +336,10 @@ def test_topic_router_fan_out(spark, workdir):
         strict.write(env)
 
 
-def test_upsert_swap_crash_recovery(spark, workdir):
-    """A crash between the two swap renames leaves only `.old-*`; the sink
-    must transparently restore it on the next write/read."""
-    import os
-
-    sink = UpsertSink(f"{workdir}/state")
-    env = to_envelope(spark.read.parquet(f"{SF_SMOKE}/events.parquet"))
-    first_half = env.filter("offset < 500")
-    rest = env.filter("offset >= 500")
-    sink.write(first_half)
-    n_before = sink.state(spark).count()
-    # simulate the crash window: live dir displaced, new dir never renamed in
-    os.rename(sink.path, f"{sink.path}.old-deadbeef")
-    assert sink.state(spark).count() == n_before  # read-side recovery
-    os.rename(sink.path, f"{sink.path}.old-deadbee2")
-    sink.write(rest)  # write-side recovery + merge continues
-    expected = REGISTRY["q27_cdc_upsert_latest"].builder(spark, SF_SMOKE)
-    assert sink.state(spark).count() == expected.count()
-
-
 def test_bucketed_upsert_matches_batch_oracle(spark, workdir):
     """BucketedUpsertSink (the O(touched-buckets) scale form) must produce
-    byte-identical state to the full-rewrite UpsertSink / batch Q27 oracle
-    through a multi-micro-batch streamed run."""
-    from cdc_platform_spark.streaming.pipeline import BucketedUpsertSink
-
+    byte-identical state to the batch Q27 oracle through a
+    multi-micro-batch streamed run."""
     sink = BucketedUpsertSink(f"{workdir}/state", n_buckets=8)
     pipe = _pipeline(spark, workdir, {"upsert": sink}, max_files_per_trigger=1)
     pipe.run_available_now()
@@ -389,8 +369,6 @@ def test_bucketed_upsert_matches_batch_oracle(spark, workdir):
 def test_bucketed_upsert_rewrites_only_touched_buckets(spark, workdir):
     """The point of bucketing: a small batch must leave every bucket its
     keys don't hash into physically untouched (same files on disk)."""
-    from cdc_platform_spark.streaming.pipeline import BucketedUpsertSink
-
     sink = BucketedUpsertSink(f"{workdir}/state", n_buckets=8)
     env = to_envelope(spark.read.parquet(f"{SF_SMOKE}/events.parquet"))
     sink.write(env)  # seed: every bucket populated
@@ -418,11 +396,10 @@ def test_bucketed_upsert_rewrites_only_touched_buckets(spark, workdir):
         if b != f"bucket={touched}":
             assert after[b] == before[b], f"{b} was rewritten by an unrelated batch"
 
-    # and the merge is still correct: state count unchanged (pk=1 updated, not added)
-    full = UpsertSink(f"{workdir}/ref_state")
-    full.write(env)
-    full.write(one_key)
-    assert sink.state(spark).count() == full.state(spark).count()
+    # and the merge is still correct: the latest-per-key algebra over
+    # everything delivered, tombstones filtered
+    ref = latest_per_key_merge(env.unionByName(one_key)).filter(F.col("op") != "d")
+    assert sink.state(spark).count() == ref.count()
 
 
 def test_bucketed_upsert_merge_plan_is_executor_side(spark, workdir):
@@ -430,8 +407,6 @@ def test_bucketed_upsert_merge_plan_is_executor_side(spark, workdir):
     scan carries a dynamic-partition-pruning subquery on bucket, so a
     micro-batch never reads untouched state; (b) the merge runs in ONE
     shuffle (the bucket window) — no extra exchange for the dedup."""
-    from cdc_platform_spark.streaming.pipeline import BucketedUpsertSink
-
     sink = BucketedUpsertSink(f"{workdir}/state", n_buckets=8)
     env = to_envelope(spark.read.parquet(f"{SF_SMOKE}/events.parquet"))
     sink.write(env)  # seed state so _merged takes the join path
@@ -456,8 +431,6 @@ def test_bucketed_upsert_merge_plan_is_executor_side(spark, workdir):
 def test_bucketed_upsert_crash_recovery(spark, workdir):
     """Crash between the per-bucket renames leaves a displaced snapshot in
     .work; the next read/write must restore it."""
-    from cdc_platform_spark.streaming.pipeline import BucketedUpsertSink
-
     sink = BucketedUpsertSink(f"{workdir}/state", n_buckets=4)
     env = to_envelope(spark.read.parquet(f"{SF_SMOKE}/events.parquet"))
     sink.write(env.filter("offset < 500"))
@@ -479,8 +452,6 @@ def test_tombstone_gc_horizon_prevents_resurrection(spark, workdir):
     replay watermark H; a replayed batch whose offsets are BELOW H must
     not resurrect the GC'd key (the merge path drops sub-horizon rows),
     while data at/above H still applies."""
-    from cdc_platform_spark.streaming.pipeline import BucketedUpsertSink
-
     schema = "pk long, offset long, op string, event_type string, value double"
     sink = BucketedUpsertSink(f"{workdir}/state", n_buckets=4)
     inserts = spark.createDataFrame(
@@ -517,8 +488,6 @@ def test_scheduled_maintenance_sweeps_on_cadence_and_gc_post_stream(spark, workd
     still arrive — the fn returns None, honoring the contract), and a
     post-stream sweep with the source's retention horizon GCs the
     tombstones without disturbing the served state."""
-    from cdc_platform_spark.streaming.pipeline import BucketedUpsertSink
-
     calls = []
 
     def horizon_fn():
@@ -569,8 +538,6 @@ def test_suggest_tombstone_horizon_is_min_watermark(spark, workdir):
     # a partition that has applied nothing blocks the suggestion
     assert suggest_tombstone_horizon(env, n_partitions=len(maxima) + 1) is None
     # the suggested horizon is safe to feed straight into the GC sweep
-    from cdc_platform_spark.streaming.pipeline import BucketedUpsertSink
-
     sink = BucketedUpsertSink(f"{workdir}/state", n_buckets=4)
     sink.write(env)
     n_live = sink.state(spark).count()
@@ -582,8 +549,6 @@ def test_maintenance_horizon_clamped_by_pending_dlq(spark, workdir):
     """A GC fence must never swallow the replay of quarantined rows: the
     maintenance sweep clamps the supplied horizon to the oldest offset
     still in the DLQ, so the eventual replay applies."""
-    from cdc_platform_spark.streaming.pipeline import BucketedUpsertSink
-
     sink = BucketedUpsertSink(f"{workdir}/state", n_buckets=4)
     dlq = DlqWriter(f"{workdir}/dlq")
 
@@ -610,10 +575,9 @@ def test_maintenance_horizon_clamped_by_pending_dlq(spark, workdir):
     # the quarantined rows replay and apply despite the fence
     n = dlq.replay(spark, sink, purge=True)
     assert n > 0
-    full = UpsertSink(f"{workdir}/ref")
-    full.write(env)
+    ref = latest_per_key_merge(env).filter(F.col("op") != "d")
     assert sorted(r["pk"] for r in sink.state(spark).collect()) == sorted(
-        r["pk"] for r in full.state(spark).collect()
+        r["pk"] for r in ref.collect()
     )
 
 
@@ -667,8 +631,6 @@ def test_maintenance_clamp_skips_replayed_rows(spark, workdir):
     """GC liveness: a quarantined row replayed WITHOUT purge stays in the
     DLQ table for audit, but must stop pinning the tombstone horizon —
     otherwise one serviced quarantine row stalls GC forever."""
-    from cdc_platform_spark.streaming.pipeline import BucketedUpsertSink
-
     sink = BucketedUpsertSink(f"{workdir}/state", n_buckets=4)
     dlq = DlqWriter(f"{workdir}/dlq")
     env = to_envelope(spark.read.parquet(f"{SF_SMOKE}/events.parquet")).localCheckpoint(
@@ -769,7 +731,6 @@ def test_kafka_shaped_stream_end_to_end(spark, workdir):
     from pyspark.sql import Window
 
     from cdc_platform_spark.sources.kafka import kafka_envelope_flat
-    from cdc_platform_spark.streaming.pipeline import UpsertSink
 
     e = spark.read.parquet(f"{SF_SMOKE}/events.parquet")
     w = Window.partitionBy("user_id").orderBy("event_id")
@@ -813,7 +774,7 @@ def test_kafka_shaped_stream_end_to_end(spark, workdir):
         spark=spark,
         source_dir=src,
         checkpoint_dir=f"{workdir}/kafka_ckpt",
-        sinks={"state": UpsertSink(f"{workdir}/kafka_state")},
+        sinks={"state": BucketedUpsertSink(f"{workdir}/kafka_state", n_buckets=1)},
         schema=schema,
         max_files_per_trigger=1,
         envelope_fn=kafka_envelope_flat,
@@ -995,14 +956,24 @@ def test_streaming_curation_funnel_matches_batch(spark, workdir):
     )
 
 
+def _agg_oracle(env):
+    """The one-shot batch aggregate the incremental view must equal: a
+    plain decimal groupBy over every delivered event."""
+    return env.groupBy("pk").agg(
+        F.count(F.lit(1)).alias("n_events"),
+        F.sum(F.col("value").cast("decimal(18,2)")).cast("double").alias("value_sum"),
+        F.min("value").alias("value_min"),
+        F.max("value").alias("value_max"),
+        F.max("offset").alias("last_offset"),
+    )
+
+
 def test_aggregating_sink_batch_id_fencing(spark, tmp_path):
     """A redelivered micro-batch (same batch id) must not double-count:
-    the applied id is committed atomically with the state swap."""
-    from cdc_platform_spark.streaming.pipeline import AggregatingSink, to_envelope
-
+    the applied id is committed atomically with the state."""
     events = spark.read.parquet("/root/testdata/sf0.001/events.parquet").limit(100)
     env = to_envelope(events)
-    sink = AggregatingSink(str(tmp_path / "agg"))
+    sink = BucketedAggregatingSink(str(tmp_path / "agg"), n_buckets=1)
     sink.write(env, batch_id=0)
     once = {r.pk: (r.n_events, r.value_sum) for r in sink.state(spark).collect()}
     sink.write(env, batch_id=0)  # replayed delivery of the same batch
@@ -1014,37 +985,34 @@ def test_aggregating_sink_batch_id_fencing(spark, tmp_path):
 
 
 def test_aggregating_sink_merge_is_batch_split_independent(spark, tmp_path):
-    """Folding the stream in as 1 batch or 4 batches reaches the same
-    state (decimal sums, mergeable aggregates)."""
-    from cdc_platform_spark.streaming.pipeline import AggregatingSink, to_envelope
-
+    """Folding the stream in as 1 batch or 4 batches reaches the one-shot
+    batch aggregate (decimal sums, mergeable aggregates)."""
     events = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
     env = to_envelope(events)
-    whole = AggregatingSink(str(tmp_path / "whole"))
+    expected = sorted(map(tuple, _agg_oracle(env).collect()))
+    whole = BucketedAggregatingSink(str(tmp_path / "whole"), n_buckets=1)
     whole.write(env, batch_id=0)
-    split = AggregatingSink(str(tmp_path / "split"))
+    split = BucketedAggregatingSink(str(tmp_path / "split"), n_buckets=1)
     for k in range(4):
         split.write(env.filter(F.pmod(F.col("seq"), F.lit(4)) == k), batch_id=k)
-    a = sorted(map(tuple, whole.state(spark).collect()))
-    b = sorted(map(tuple, split.state(spark).collect()))
-    assert a == b
+    assert sorted(map(tuple, whole.state(spark).collect())) == expected
+    assert sorted(map(tuple, split.state(spark).collect())) == expected
 
 
 def test_aggregating_sink_recovers_displaced_state(spark, tmp_path):
-    """Crash between the two swap renames leaves only a .old-* snapshot;
-    the next write/state call must restore it, and the replayed batch
-    (its id absent from the restored meta) re-applies exactly once."""
+    """Crash between a bucket's two renames leaves its snapshot displaced
+    into the .work dir; the next state call must restore it, and the
+    replayed batch (its id in the restored bucket's meta) is a no-op."""
     import os
-
-    from cdc_platform_spark.streaming.pipeline import AggregatingSink, to_envelope
 
     events = spark.read.parquet("/root/testdata/sf0.001/events.parquet").limit(100)
     env = to_envelope(events)
-    sink = AggregatingSink(str(tmp_path / "agg"))
+    sink = BucketedAggregatingSink(str(tmp_path / "agg"), n_buckets=1)
     sink.write(env, batch_id=0)
     expected = sorted(map(tuple, sink.state(spark).collect()))
-    # simulate the crash window: live dir displaced, new dir never landed
-    os.rename(str(tmp_path / "agg"), str(tmp_path / "agg.old-deadbeef"))
+    # simulate the crash window: live bucket displaced, new one never landed
+    os.makedirs(sink._work, exist_ok=True)
+    os.rename(sink._bucket_dir(0), f"{sink._work}/bucket=0.old-deadbeef")
     assert sorted(map(tuple, sink.state(spark).collect())) == expected
     sink.write(env, batch_id=0)  # replay of the already-applied batch: no-op
     assert sorted(map(tuple, sink.state(spark).collect())) == expected
@@ -1096,17 +1064,13 @@ def test_exactly_once_view_keeps_distinct_topics_same_coordinates(spark, tmp_pat
 
 
 def test_topic_router_forwards_batch_id_to_fenced_sinks(spark, tmp_path):
-    """Routing through TopicRouterSink must not disable AggregatingSink's
+    """Routing through TopicRouterSink must not disable an aggregate sink's
     redelivery fence: the router forwards the micro-batch id."""
-    from cdc_platform_spark.streaming.pipeline import (
-        AggregatingSink,
-        TopicRouterSink,
-        to_envelope,
-    )
+    from cdc_platform_spark.streaming.pipeline import TopicRouterSink
 
     events = spark.read.parquet("/root/testdata/sf0.001/events.parquet").limit(50)
     env = to_envelope(events)
-    agg = AggregatingSink(str(tmp_path / "agg"))
+    agg = BucketedAggregatingSink(str(tmp_path / "agg"), n_buckets=1)
     router = TopicRouterSink({}, fallback=agg)
     assert getattr(router, "wants_batch_id", False)
     router.write(env, batch_id=0)
@@ -1118,14 +1082,12 @@ def test_topic_router_forwards_batch_id_to_fenced_sinks(spark, tmp_path):
 def test_dlq_replay_purge_makes_repeat_a_noop(spark, tmp_path):
     """purge=True removes the replayed rows, so an operational retry of
     the replay cannot double-apply into a non-idempotent sink."""
-    from cdc_platform_spark.streaming.pipeline import AggregatingSink, DlqWriter, to_envelope
-
     events = spark.read.parquet("/root/testdata/sf0.001/events.parquet").limit(40)
     env = to_envelope(events)
     dlq = DlqWriter(str(tmp_path / "dlq"))
     dlq.write(env, "agg", RuntimeError("sink down"))
     dlq.write(env.limit(10), "other", RuntimeError("unrelated"))
-    agg = AggregatingSink(str(tmp_path / "view"))
+    agg = BucketedAggregatingSink(str(tmp_path / "view"), n_buckets=1)
     n = dlq.replay(spark, agg, sink_id="agg", purge=True)
     assert n == 40
     once = {r.pk: (r.n_events, r.value_sum) for r in agg.state(spark).collect()}
@@ -1140,10 +1102,8 @@ def test_recover_sweeps_stale_tmp_dirs(spark, tmp_path):
     accumulating one full state copy per crash."""
     import os
 
-    from cdc_platform_spark.streaming.pipeline import UpsertSink, to_envelope
-
     events = spark.read.parquet("/root/testdata/sf0.001/events.parquet").limit(30)
-    sink = UpsertSink(str(tmp_path / "state"))
+    sink = BucketedUpsertSink(str(tmp_path / "state"), n_buckets=1)
     sink.write(to_envelope(events))
     stale = str(tmp_path / "state.tmp-deadbeef")
     os.makedirs(stale)
@@ -1157,7 +1117,6 @@ def test_json_poison_frame_cannot_erase_upsert_state(spark, tmp_path):
     of the served view (op <> 'd' is NULL) — erasing the key. The JSON
     parser now marks it decode_error, and the merge excludes null-op rows."""
     from cdc_platform_spark.sources.debezium import parse_debezium, to_flat_envelope
-    from cdc_platform_spark.streaming.pipeline import UpsertSink
 
     frames = spark.createDataFrame(
         [
@@ -1169,7 +1128,7 @@ def test_json_poison_frame_cannot_erase_upsert_state(spark, tmp_path):
     env = to_flat_envelope(parse_debezium(frames))
     rows = {r.offset: r for r in env.collect()}
     assert rows[99].decode_error == "decode failed" and rows[1].decode_error is None
-    sink = UpsertSink(str(tmp_path / "state"))
+    sink = BucketedUpsertSink(str(tmp_path / "state"), n_buckets=1)
     sink.write(env.drop("decode_error"))
     state = {r.pk: r.offset for r in sink.state(spark).collect()}
     assert state == {7: 1}  # the valid row survives; the poison one never merged
@@ -1256,19 +1215,12 @@ def test_get_spark_reasserts_semantic_configs(spark):
 
 def test_bucketed_agg_matches_flat_agg_under_any_batching(spark, tmp_path):
     """BucketedAggregatingSink must produce the identical aggregate view to
-    the flat AggregatingSink for any micro-batch split."""
-    from cdc_platform_spark.streaming.pipeline import (
-        AggregatingSink,
-        BucketedAggregatingSink,
-        to_envelope,
-    )
-
+    the flat one-shot groupBy over the whole log for any micro-batch
+    split."""
     env = to_envelope(
         spark.read.parquet(f"{SF_SMOKE}/events.parquet")
     ).localCheckpoint(eager=True)
-    flat = AggregatingSink(str(tmp_path / "flat"))
-    flat.write(env, batch_id=0)
-    expected = sorted(map(tuple, flat.state(spark).collect()))
+    expected = sorted(map(tuple, _agg_oracle(env).collect()))
 
     bucketed = BucketedAggregatingSink(str(tmp_path / "bkt"), n_buckets=8)
     for k in range(3):
@@ -1282,8 +1234,6 @@ def test_bucketed_agg_per_bucket_fence_heals_partial_commit(spark, tmp_path):
     that missed it — no double counts, no gaps."""
     import os
     import shutil as sh
-
-    from cdc_platform_spark.streaming.pipeline import BucketedAggregatingSink, to_envelope
 
     env = to_envelope(
         spark.read.parquet(f"{SF_SMOKE}/events.parquet").limit(200)
@@ -1322,8 +1272,6 @@ def test_bucketed_agg_rewrites_only_touched_buckets(spark, tmp_path):
     """A small batch must leave unrelated buckets physically untouched."""
     import os
 
-    from cdc_platform_spark.streaming.pipeline import BucketedAggregatingSink, to_envelope
-
     env = to_envelope(spark.read.parquet(f"{SF_SMOKE}/events.parquet"))
     sink = BucketedAggregatingSink(str(tmp_path / "s"), n_buckets=8)
     sink.write(env, batch_id=0)
@@ -1352,8 +1300,6 @@ def test_bucketed_agg_merge_plan_is_executor_side(spark, tmp_path):
     (b) combine raw event rows map-side BEFORE the (bucket, pk) exchange
     (a partial HashAggregate below the shuffle — events never cross the
     wire uncombined), and (c) shuffle nothing on a non-bucket key."""
-    from cdc_platform_spark.streaming.pipeline import BucketedAggregatingSink, to_envelope
-
     env = to_envelope(spark.read.parquet(f"{SF_SMOKE}/events.parquet"))
     sink = BucketedAggregatingSink(str(tmp_path / "s"), n_buckets=8)
     sink.write(env, batch_id=0)
